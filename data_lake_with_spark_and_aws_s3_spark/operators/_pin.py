@@ -1,26 +1,21 @@
-"""Invocation-fresh in-query persist — reuse WITHIN one query run,
+"""Invocation-scoped in-query persist: reuse WITHIN one query run,
 never across runs.
 
-Why this exists (round 8, optimization): ``DataFrame.persist()`` /
-``.cache()`` register the frame in the session's CacheManager keyed by
-CANONICALIZED LOGICAL PLAN. A registered query function is pure — every
-invocation builds the same plan over the same parquet inputs — so a
-second invocation in the same session (bench warm-up -> timed runs,
-repeated oracle checks) silently rewrites its plan onto the FIRST
-invocation's cached blocks. Measured on q_minhash_containment at sf0.1:
-run 1 = 15.2 s, run 2 = 2.6 s with ``InMemoryTableScan`` in the second
-plan — the bench was timing cache reads, not the engine. That is
-cross-run result caching, which the bench methodology forbids: every
-invocation must compute from the parquet inputs.
+``persist()`` registers a frame in the session's CacheManager keyed by
+its canonicalized logical plan, and a registered query builds the same
+plan on every invocation, so a bare persist lets a later run (bench
+warm-up -> timed runs, a different query sharing a subplan) read this
+run's blocks: measured on q_minhash_containment at sf0.1, run 1 took
+15.2 s and run 2 2.6 s off the first run's cache. Every invocation must
+compute from its parquet inputs.
 
-``pin(df, key)`` gives the legitimate half of persist — a multi-consumer
-midframe materialized once per query run, with lineage KEPT (a lost
-executor recomputes blocks instead of failing the job, unlike
-localCheckpoint) — while restoring the methodology: each call site
-unpersists the frame it pinned on the PREVIOUS invocation before
-persisting the new one, so the CacheManager never carries results from
-one run into the next. The bookkeeping dict holds one tiny DataFrame
-handle per call site, not data; blocks are freed by the unpersist.
+``pin(df)`` persists a multi-consumer midframe, keeping lineage (a lost
+executor recomputes blocks, unlike localCheckpoint), and appends it to
+the pin scope of the current context (``registry.SCOPE``). The
+registry wrapper opens that scope at a top-level query entry, after
+unpersisting the frames this context's previous top-level invocation
+pinned; nested entries join it. The frames stay cached after the
+query function returns, because ``collect()`` runs after it.
 """
 
 from __future__ import annotations
@@ -28,72 +23,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
-# (applicationId, *call-site key) -> the DataFrame pinned by the
-# previous invocation of that call site. Handles only — never read as
-# data; the sole purpose is to unpersist before re-pinning.
-_PINNED: dict[tuple, DataFrame] = {}
-_PINNED_MAX = 64
-
-# Reentrancy depth of registered-query invocations (registry.query's
-# wrapper). Capstones call component queries through REGISTRY mid-build;
-# only the OUTERMOST entry may clear pins, or a capstone would defeat
-# its own components' midframes.
-_DEPTH = 0
+from ..registry import SCOPE
 
 
-def clear_application_pins(spark) -> None:
-    """Unpersist every pin belonging to ``spark``'s application.
-
-    Round 9 (closes the round-8 residual cross-QUERY cache channel):
-    pin() kept each call site fresh across ITS OWN re-invocations, but
-    blocks stayed registered in the CacheManager between different
-    queries sharing one JVM — a later query whose plan contained a
-    canonically-identical subplan (e.g. the 4-gram shingle frame
-    across the neardup family) silently read the earlier query's
-    pinned blocks. registry.query's wrapper calls this at every
-    top-level query entry, so no query can ever start with another
-    query's (or its own previous run's) blocks alive."""
-    try:
-        appid = spark.sparkContext.applicationId
-    except Exception:
-        return  # context stopped — nothing cached there anymore
-    for k in [k for k in _PINNED if k[0] == appid]:
-        prev = _PINNED.pop(k, None)
-        if prev is not None:
-            try:
-                prev.unpersist(blocking=False)
-            except Exception:
-                pass
-
-
-def pin(df: DataFrame, key: tuple, level: StorageLevel | None = None) -> DataFrame:
-    """persist() ``df`` for reuse by multiple consumers inside THIS
-    query invocation, after unpersisting whatever the same call site
-    pinned last time (freshness across invocations).
-
-    ``key`` identifies the call site and its inputs, e.g.
-    ``("q_minhash_containment", "shingles", sf_dir)`` — include
-    ``sf_dir`` so tests running several scale dirs in one session don't
-    evict each other's still-in-flight frames.
-    """
-    full_key = (df.sparkSession.sparkContext.applicationId, *key)
-    prev = _PINNED.pop(full_key, None)
-    if prev is not None:
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:
-            pass  # session gone or already unpersisted — freshness holds
-    while len(_PINNED) >= _PINNED_MAX:
-        # Evict the oldest entry of THIS application first (other
-        # applications' in-flight pins are never collateral damage —
-        # ADVICE r8); fall back to the globally oldest only when every
-        # entry belongs to some other (likely stopped) session.
-        same_app = next((k for k in _PINNED if k[0] == full_key[0]), None)
-        old = _PINNED.pop(same_app if same_app is not None else next(iter(_PINNED)))
-        try:
-            old.unpersist(blocking=False)
-        except Exception:
-            pass
-    out = df.persist(level) if level is not None else df.persist()
-    _PINNED[full_key] = out
-    return out
+def pin(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
+    """persist() ``df`` for the consumers of the current query run."""
+    scope = SCOPE.get()
+    if not isinstance(scope, list):
+        raise RuntimeError("pin() called outside a registered query invocation")
+    scope.append(df.persist(level) if level is not None else df.persist())
+    return scope[-1]

@@ -3,8 +3,10 @@
 A bare `Window.orderBy(...)` with no partition key makes Spark funnel
 every input row through ONE task — the classic scale trap
 (tests/test_plans.py lints for it registry-wide). These helpers build
-the distributed equivalent once, the idiom q_global_row_number
-(sorts.py:52) demonstrates:
+the distributed equivalent once. Every range-partitioned ranking or
+running sum in the registry calls global_order_stats; only
+analytics.q_skyline hand-rolls the shape, for a running max, which
+this helper does not compute:
 
   1. repartitionByRange on the sort key — partition i's keys all
      precede partition i+1's (sampled boundaries);

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.loader import load_table
+from ._twophase import global_order_stats
 
 MAX_DIST = 3
 
@@ -238,7 +239,7 @@ def q_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ROW_NUMBER over the unique (key, doc_id) order; levenshtein is
     the standard DP metric in both).
 
-    Scale: global ranks use the q_global_row_number decomposition
+    Scale: global ranks come from _twophase.global_order_stats
     (range repartition + per-partition row_number + tiny offset
     broadcast — no single-task window); adjacency then joins on the
     rn-div-4 bucket (each left row probes 2 buckets) with the rank
@@ -249,31 +250,9 @@ def q_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = d.select(
         "doc_id", F.lower(F.substring("text", 1, 16)).alias("k")
     )
-    ranged = keyed.repartitionByRange(16, F.asc("k"), F.asc("doc_id"))
-    # pin ONE pid assignment for both the local-window branch and the
-    # broadcast offsets branch (round-7 fix, see _twophase.py: two
-    # independent materializations of the range exchange can disagree)
-    part = ranged.withColumn("pid", F.spark_partition_id()).localCheckpoint(
-        eager=False
-    )
-    w_local = Window.partitionBy("pid").orderBy(F.asc("k"), F.asc("doc_id"))
-    local = part.withColumn("local_rn", F.row_number().over(w_local))
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        part.groupBy("pid")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn("offset", F.coalesce(F.sum("n").over(w_off), F.lit(0)))
-        .select("pid", "offset")
-    )
-    ranked = (
-        local.join(F.broadcast(offsets), "pid")
-        .select(
-            "doc_id",
-            "k",
-            (F.col("offset") + F.col("local_rn")).cast("bigint").alias("rn"),
-        )
-        .localCheckpoint()  # feeds both sides of the adjacency join
-    )
+    ranked = global_order_stats(
+        keyed, [F.asc("k"), F.asc("doc_id")]
+    ).localCheckpoint()  # feeds both sides of the adjacency join
     a = ranked.select(
         F.col("doc_id").alias("d1"),
         F.col("k").alias("k1"),

@@ -436,13 +436,12 @@ def q_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both verify sides — unpinned, Catalyst inlined the mapInPandas
     # subtree at every reference (8 Python eval nodes in the before-
     # plan, plans/r08/q_image_phash_dedup_before.txt), re-running the
-    # Python hashing pass per reference. Invocation-fresh (see
+    # Python hashing pass per reference. Invocation-scoped (see
     # operators/_pin.py), lineage kept.
     hashes = pin(
         d.mapInPandas(
             ahash, "doc_id long, h0 long, h1 long, h2 long, h3 long"
-        ),
-        ("q_image_phash_dedup", "hashes", sf_dir),
+        )
     )
     bands = hashes.select(
         "doc_id",

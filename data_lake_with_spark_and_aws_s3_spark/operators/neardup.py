@@ -752,19 +752,13 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the recall join). Unpinned, Catalyst inlines the full shingle
     -> hash -> band -> verify pipeline at every reference — the
     before-plan scanned documents.parquet 36 times
-    (plans/r08/q_minhash_lsh_before.txt). pin() (invocation-fresh
+    (plans/r08/q_minhash_lsh_before.txt). pin() (invocation-scoped
     persist, operators/_pin.py) materializes each pair list (a few
-    longs per near-dup pair) once per run, keeps lineage for fault
-    tolerance, and unpersists the previous run's frame so the bench
+    longs per near-dup pair) once per run and keeps lineage for fault
+    tolerance; the next run starts by unpersisting it, so the bench
     never times cache reads."""
-    X = pin(
-        _xx_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b"),
-        ("q_minhash_lsh", "xx_pairs", sf_dir),
-    )
-    M = pin(
-        _ml_exact_pairs(spark, sf_dir).select("doc_a", "doc_b"),
-        ("q_minhash_lsh", "ml_pairs", sf_dir),
-    )
+    X = pin(_xx_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b"))
+    M = pin(_ml_exact_pairs(spark, sf_dir).select("doc_a", "doc_b"))
 
     # raw-token precision check of the xx-verified pairs
     raw = load_table(spark, sf_dir, "documents").select(
@@ -1238,11 +1232,11 @@ def q_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT localCheckpoint — lineage is kept, so a lost executor
     recomputes its blocks from the parquet scan instead of failing the
     job, and the explosion never competes with shuffle/aggregate
-    execution memory. The pin (r8 optimization pass) also unpersists
-    the PREVIOUS invocation's frame: a bare persist() leaks results
-    across runs through the CacheManager's canonical-plan match
-    (measured: run 1 = 15.2 s, run 2 = 2.6 s reading the first run's
-    cache), which the bench methodology forbids."""
+    execution memory. The pin is scoped to this invocation and
+    unpersisted when the next one starts: a bare persist() leaks
+    results across runs through the CacheManager's canonical-plan
+    match (measured: run 1 = 15.2 s, run 2 = 2.6 s reading the first
+    run's cache), which the bench methodology forbids."""
     # Scan fan-out + zip-form shingles (r8): identical shingle values
     # (positions 1..len-3 of the empty-filtered token array, ' '
     # joins), built the parallel, per-row-cheap way — see
@@ -1262,10 +1256,9 @@ def q_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # memory at scale; local reads off the shuffle disks are cheap
     # relative to the posting joins they feed. pin() (not a bare
     # persist) so each invocation recomputes from parquet instead of
-    # silently reading the previous run's cache.
+    # silently reading an earlier run's cache.
     sh = pin(
         tk.select("doc_id", F.explode(shingles).alias("shingle")),
-        ("q_minhash_containment", "shingles", sf_dir),
         StorageLevel.DISK_ONLY,
     )
     size_a = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))

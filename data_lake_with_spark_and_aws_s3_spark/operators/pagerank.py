@@ -106,15 +106,10 @@ def _oracle() -> str:
     """
 
 
-@query(
-    "q_pagerank",
-    oracle=_oracle(),
-    tags=("graph", "iterative", "pagerank"),
-)
-def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-100 nodes by 3-iteration PageRank (damping 0.85) on the
-    customer-supplier trade graph. Scaled-int ranks; two shuffles per
-    iteration (edge join + per-node agg)."""
+def _trade_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The namespaced trade-graph ``vertices`` (node) and the
+    checkpointed symmetric edge list with static out-degrees
+    (src, dst, outdeg) that every PageRank iteration joins ranks into."""
     o = load_table(spark, sf_dir, "orders")
     l = load_table(spark, sf_dir, "lineitem")
     c = load_table(spark, sf_dir, "customer")
@@ -147,7 +142,19 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("src", "dst", "outdeg")
         .localCheckpoint(eager=True)
     )
+    return vertices, edges
 
+
+@query(
+    "q_pagerank",
+    oracle=_oracle(),
+    tags=("graph", "iterative", "pagerank"),
+)
+def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-100 nodes by 3-iteration PageRank (damping 0.85) on the
+    customer-supplier trade graph. Scaled-int ranks; two shuffles per
+    iteration (edge join + per-node agg)."""
+    vertices, edges = _trade_graph(spark, sf_dir)
     ranks = vertices.select("node", F.lit(ONE).cast("long").alias("rank_scaled"))
     for _ in range(ITERS):
         inc = (
@@ -412,34 +419,7 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     mass — the r.rank_scaled > 0 join filter both engines apply), so
     early iterations touch a neighborhood, not the whole graph. Final
     top-k is TakeOrderedAndProject."""
-    o = load_table(spark, sf_dir, "orders")
-    l = load_table(spark, sf_dir, "lineitem")
-    c = load_table(spark, sf_dir, "customer")
-    s = load_table(spark, sf_dir, "supplier")
-
-    e0 = (
-        o.join(l, o["o_orderkey"] == l["l_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).alias("src"),
-            (F.col("l_suppkey") * 2 + 1).alias("dst"),
-        )
-        .distinct()
-    )
-    sym = e0.unionAll(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
-    vertices = (
-        c.select((F.col("c_custkey") * 2).alias("node"))
-        .unionAll(s.select((F.col("s_suppkey") * 2 + 1).alias("node")))
-    )
-    deg = sym.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("outdeg")
-    )
-    edges = (
-        sym.join(deg, sym["src"] == deg["node"])
-        .select("src", "dst", "outdeg")
-        .localCheckpoint(eager=True)
-    )
+    vertices, edges = _trade_graph(spark, sf_dir)
     seeds = spark.createDataFrame(
         [(2 * k, _PPR_RESTART) for k in _PPR_SEED_CUSTS],
         "node long, restart long",

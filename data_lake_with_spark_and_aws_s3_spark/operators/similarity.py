@@ -1070,8 +1070,9 @@ _SEMDEDUP_SPLIT = 256  # band buckets above this size re-key on 4 extra
 # — no re-keying on signature bits can separate identical signatures).
 # Both levels are conditional, so at/below the threshold the keying —
 # and therefore every shipped-SF output — is bit-identical to the
-# unrefined form (tests/test_similarity_fast.py plants a mega-bucket
-# and asserts the split ladder + the small-bucket identity).
+# unrefined form (the semdedup tests in tests/test_similarity_fast.py
+# plant a mega-bucket and assert the split ladder + the small-bucket
+# identity).
 
 
 def semdedup_keyed(bands):
@@ -2173,8 +2174,8 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactness baseline); per-anchor ranking is a keyed window cut at
     {_HNM_K} (WindowGroupLimit heap); the hardest-positive reduction
     is one hash aggregate over the same scored frame. At index scale
-    the scored frame is replaced by the ANN shortlist
-    (similarity_fast.py) with identical downstream mechanics."""
+    the scored frame is replaced by the ANN shortlist (q_ann_ivf /
+    q_ann_pq) with identical downstream mechanics."""
     v = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.loader import load_table
+from ._twophase import global_order_stats
 
 
 @query(
@@ -55,47 +56,13 @@ def q_global_row_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition key (Spark plans that as one task holding the whole
     table — the classic scale trap this operator replaces).
 
-    The distributed form: (1) repartitionByRange on the sort key —
-    partition i's keys all precede partition i+1's; (2) per-partition
-    local row_number (window partitioned by spark_partition_id, so
-    parallel); (3) per-partition counts -> running-sum offsets, a
-    window over ≤ num_partitions rows, broadcast back; (4) global rn =
-    offset + local rn. Sampled range boundaries are run-dependent, but
-    the OUTPUT is deterministic: the sort key (totalprice DESC,
-    orderkey) is unique, so whatever the boundary placement, offsets +
-    local ranks reproduce exactly ROW_NUMBER() — which the oracle
-    checks value-for-value. Cost: one range exchange + one tiny
-    offset exchange; every stage is partition-parallel."""
+    The distributed form is _twophase.global_order_stats: range
+    partition on the sort key, parallel per-partition row numbers,
+    per-partition counts -> offsets over <= 16 rows, broadcast back.
+    Sampled range boundaries are run-dependent, but the OUTPUT is
+    deterministic: the sort key (totalprice DESC, orderkey) is unique,
+    so offsets + local ranks reproduce exactly ROW_NUMBER() — which
+    the oracle checks value-for-value. Cost: one range exchange + one
+    tiny offset exchange; every stage is partition-parallel."""
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    ranged = o.repartitionByRange(16, F.desc("o_totalprice"), F.asc("o_orderkey"))
-    # pin ONE pid assignment for both the local-window branch and the
-    # broadcast offsets branch (round-7 fix, see _twophase.py: two
-    # independent materializations of the range exchange can disagree)
-    part = ranged.withColumn("pid", F.spark_partition_id()).localCheckpoint(
-        eager=False
-    )
-
-    from pyspark.sql import Window
-
-    w_local = Window.partitionBy("pid").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    local = part.withColumn("local_rn", F.row_number().over(w_local))
-
-    w_off = (
-        Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    )  # <= 16 rows: the one place a keyless window is fine
-    offsets = (
-        part.groupBy("pid")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn("offset", F.coalesce(F.sum("n").over(w_off), F.lit(0)))
-        .select("pid", "offset")
-    )
-    return (
-        local.join(F.broadcast(offsets), "pid")
-        .select(
-            "o_orderkey",
-            "o_totalprice",
-            (F.col("offset") + F.col("local_rn")).cast("bigint").alias("rn"),
-        )
-    )
+    return global_order_stats(o, [F.desc("o_totalprice"), F.asc("o_orderkey")])

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..sources.loader import load_table
 from ._pin import pin
+from ._twophase import global_order_stats
 
 _TOL = 1e-9
 
@@ -311,11 +312,11 @@ def q_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     possible shuffle (|cells| == |langs x sources|)."""
     d = load_table(spark, sf_dir, "documents")
     o = d.groupBy("lang", "source").agg(F.count(F.lit(1)).alias("obs"))
-    # tiny; feeds marginals AND the cell join — pinned (invocation-fresh
+    # tiny; feeds marginals AND the cell join — pinned (invocation-scoped
     # persist, operators/_pin.py): a bare .cache() would hand later
-    # invocations the previous run's blocks via the CacheManager's
+    # invocations this run's blocks via the CacheManager's
     # canonical-plan match, which the bench methodology forbids
-    o = pin(o, ("q_chi_square", "obs", sf_dir))
+    o = pin(o)
     rt = o.groupBy("lang").agg(F.sum("obs").alias("row_tot"))
     ct = o.groupBy("source").agg(F.sum("obs").alias("col_tot"))
     n = o.agg(F.sum("obs").alias("n"))
@@ -397,7 +398,7 @@ def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     c * n <= 1.5e5 * 1.5e5 at sf0.1 — far inside int64.
 
     Scale: one scan -> per-value aggregate -> cumulative counts via
-    the DISTRIBUTED two-phase form (q_global_row_number's pattern:
+    the DISTRIBUTED two-phase form (_twophase.global_order_stats:
     range-partition on x, per-partition local cumulative sums in
     parallel, then per-partition totals -> broadcast offsets — never
     the keyless single-task window Spark would otherwise plan)
@@ -416,39 +417,11 @@ def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_x = pts.groupBy("x").agg(
         F.sum("in_a").alias("da"), F.sum("in_b").alias("db")
     )
-    from pyspark.sql import Window as W
-
-    # pin ONE pid assignment for both branches (round-7 fix, see
-    # _twophase.py: independent materializations of the range exchange
-    # can disagree)
-    part = (
-        per_x.repartitionByRange(16, F.asc("x"))
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
-    w_local = W.partitionBy("pid").orderBy("x").rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    local = part.select(
-        "x",
-        "pid",
-        F.sum("da").over(w_local).alias("la"),
-        F.sum("db").over(w_local).alias("lb"),
-    )
-    w_off = W.orderBy("pid").rowsBetween(W.unboundedPreceding, -1)  # <= 16 rows
-    offsets = (
-        part.groupBy("pid")
-        .agg(F.sum("da").alias("na"), F.sum("db").alias("nb"))
-        .select(
-            "pid",
-            F.coalesce(F.sum("na").over(w_off), F.lit(0)).alias("off_a"),
-            F.coalesce(F.sum("nb").over(w_off), F.lit(0)).alias("off_b"),
-        )
-    )
-    grid = local.join(F.broadcast(offsets), "pid").select(
-        "x",
-        (F.col("off_a") + F.col("la")).alias("c_a"),
-        (F.col("off_b") + F.col("lb")).alias("c_b"),
+    grid = global_order_stats(
+        per_x,
+        [F.asc("x")],
+        running_sums={"c_a": F.col("da"), "c_b": F.col("db")},
+        rn_col=None,
     )
     tot = pts.agg(F.sum("in_a").alias("n_a"), F.sum("in_b").alias("n_b"))
     dev = grid.crossJoin(F.broadcast(tot)).select(
@@ -503,34 +476,15 @@ def q_gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums are exact int64 (rank * cents <= 1.5e5 * ~1e8 at sf0.1, and
     the sum stays < 2^63); the single closing division is the only
     float. Ranks come from the DISTRIBUTED two-phase global row number
-    (q_global_row_number's pattern — range partition, parallel local
+    (_twophase.global_order_stats — range partition, parallel local
     ranks, broadcast offsets), never the keyless single-task window;
     (cents, o_custkey) is unique so the ranks reproduce exactly."""
     o = load_table(spark, sf_dir, "orders")
     cust = o.groupBy("o_custkey").agg(
         F.sum(F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)")).alias("cents")
     )
-    from pyspark.sql import Window as W
-
-    # pin ONE pid assignment for both branches (round-7 fix, see
-    # _twophase.py)
-    part = (
-        cust.repartitionByRange(16, F.asc("cents"), F.asc("o_custkey"))
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
-    w_local = W.partitionBy("pid").orderBy("cents", "o_custkey")
-    local = part.withColumn("local_rn", F.row_number().over(w_local))
-    w_off = W.orderBy("pid").rowsBetween(W.unboundedPreceding, -1)  # <= 16 rows
-    offsets = (
-        part.groupBy("pid")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            "pid", F.coalesce(F.sum("cnt").over(w_off), F.lit(0)).alias("offset")
-        )
-    )
-    ranked = local.join(F.broadcast(offsets), "pid").select(
-        "cents", (F.col("offset") + F.col("local_rn")).alias("i")
+    ranked = global_order_stats(
+        cust, [F.asc("cents"), F.asc("o_custkey")], rn_col="i"
     )
     return ranked.agg(
         F.count(F.lit(1)).alias("n_customers"),
@@ -3029,8 +2983,6 @@ def q_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-value aggregate -> two-phase cumulative -> 1-row
     weighted reduction; num <= N*(n_a*n_b)^2*1e6 ~ 1.5e32 at sf0.1,
     inside DECIMAL(38)."""
-    from ._twophase import global_order_stats
-
     o = load_table(spark, sf_dir, "orders").filter(
         F.year("o_orderdate").isin(1997, 1998)
     )

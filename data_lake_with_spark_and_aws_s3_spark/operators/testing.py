@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..sources.loader import load_table
 from ._sqlutil import _hex_val_sql
+from ._twophase import global_order_stats
 
 # ---------------------------------------------------------------------
 # q_anova_oneway
@@ -492,64 +493,28 @@ def q_sprt_boundary(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedded as literals, so the whole trajectory is exact integer
     arithmetic — no libm at query time at all.
 
-    Scale (the sorts.py:52 two-phase idiom — VERDICT r6 #2 fix): a
-    bare `Window.orderBy(ts)` would collapse the whole events table
-    into ONE task. Instead: (1) repartitionByRange on (ts, event_id)
-    so partition i's events all precede partition i+1's; (2)
-    per-partition local row_number and local cumulative hit sum
-    (windows partitioned by spark_partition_id — parallel); (3)
-    per-partition (count, hits) totals -> running prefix offsets over
-    <= num_partitions rows, broadcast back; (4) global n_seen =
-    offset_n + local rn, global k = offset_k + local cumsum. The sort
-    key (ts, event_id) is unique, so the output is identical to the
-    single-task form regardless of sampled range boundaries. Cost: one
-    range exchange + one tiny offset exchange; every data-proportional
-    stage is partition-parallel. In production the same integer LLR
-    update runs inside a stateful streaming operator keyed by
-    experiment id."""
+    Scale (VERDICT r6 #2 fix): a bare `Window.orderBy(ts)` would
+    collapse the whole events table into ONE task. Instead the
+    two-phase _twophase.global_order_stats on (ts, event_id) gives the
+    global n_seen (row number) and k (running hit sum) from
+    per-partition local windows plus broadcast per-partition offsets.
+    The sort key (ts, event_id) is unique, so the output is identical
+    to the single-task form regardless of sampled range boundaries.
+    Cost: one range exchange + one tiny offset exchange; every
+    data-proportional stage is partition-parallel. In production the
+    same integer LLR update runs inside a stateful streaming operator
+    keyed by experiment id."""
     e = load_table(spark, sf_dir, "events").select(
         (F.col("event_type") == "purchase").cast("int").alias("hit"),
         "ts",
         "event_id",
     )
-    ranged = e.repartitionByRange(16, F.asc("ts"), F.asc("event_id"))
-    # pin ONE pid assignment for both the local-window branch and the
-    # broadcast offsets branch (round-7 fix, see _twophase.py: two
-    # independent materializations of the range exchange can disagree)
-    part = ranged.withColumn("pid", F.spark_partition_id()).localCheckpoint(
-        eager=False
-    )
-    w_local = Window.partitionBy("pid").orderBy("ts", "event_id")
-    local = part.select(
-        "pid",
-        F.row_number().over(w_local).alias("local_rn"),
-        F.sum("hit").over(w_local).cast("long").alias("local_k"),
-    )
-    # per-partition totals -> exclusive running prefix offsets; the
-    # keyless window here is over <= 16 rows (one per partition) — the
-    # one place it's fine, exactly as in q_global_row_number.
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        part.groupBy("pid")
-        .agg(
-            F.count(F.lit(1)).alias("n_part"),
-            F.sum("hit").cast("long").alias("k_part"),
-        )
-        .withColumn("off_n", F.coalesce(F.sum("n_part").over(w_off), F.lit(0)))
-        .withColumn(
-            "off_k",
-            F.coalesce(F.sum("k_part").over(w_off), F.lit(0)).cast("long"),
-        )
-        .select("pid", "off_n", "off_k")
-    )
-    cum = (
-        local.join(F.broadcast(offsets), "pid")
-        .select(
-            (F.col("off_n") + F.col("local_rn")).alias("n_seen"),
-            (F.col("off_k") + F.col("local_k")).cast("long").alias("k"),
-        )
-        .filter(F.col("n_seen") % _SPRT_STEP == 0)
-    )
+    cum = global_order_stats(
+        e,
+        [F.asc("ts"), F.asc("event_id")],
+        running_sums={"k": F.col("hit")},
+        rn_col="n_seen",
+    ).filter(F.col("n_seen") % _SPRT_STEP == 0)
     llr = F.col("k") * F.lit(_SPRT_L1) + (F.col("n_seen") - F.col("k")) * F.lit(
         _SPRT_L0
     )
@@ -842,8 +807,6 @@ def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one (value, group) hash aggregate over the scan, a
     value-histogram two-phase prefix sum, one k-row group aggregate,
     and 1-row stitches. The scan is the only data-sized stage."""
-    from ._twophase import global_order_stats
-
     base = load_table(spark, sf_dir, "documents").select(
         F.col("source").alias("grp"), F.col("n_chars").alias("x")
     )
@@ -1272,8 +1235,6 @@ def q_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan -> value histogram (two-phase cumulative) + one
     k-row group aggregate; median and marginals broadcast as 1-row
     frames. The scan is the only data-sized stage."""
-    from ._twophase import global_order_stats
-
     base = load_table(spark, sf_dir, "documents").select(
         F.col("source").alias("grp"), F.col("n_chars").alias("x")
     )

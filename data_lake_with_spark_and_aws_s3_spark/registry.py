@@ -11,7 +11,10 @@ from __future__ import annotations
 
 import functools
 from collections.abc import Callable
+from contextvars import ContextVar
 from dataclasses import dataclass, field
+
+from py4j.protocol import Py4JError
 
 
 @dataclass(frozen=True)
@@ -26,26 +29,37 @@ class QuerySpec:
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def _fresh_entry(fn: Callable) -> Callable:
-    """Wrap a registered query fn so every TOP-LEVEL invocation starts
-    with the session's pins cleared (round 9: closes the cross-query
-    CacheManager channel — see operators/_pin.py docstring). Capstones
-    invoke component queries through REGISTRY mid-build; the depth
-    counter keeps those nested entries from defeating the outer
-    query's own midframes. The module-level function name still binds
-    the raw fn, so direct Python calls bypass the wrapper entirely."""
+# The pin scope of this context (each thread starts with its own, so
+# concurrent queries on one session never share one): the list pin()
+# appends to while a registered-query invocation is open, frozen into a
+# tuple when the top-level invocation returns. The frozen frames stay
+# cached for the caller's collect() until this context's next top-level
+# entry unpersists them.
+SCOPE: ContextVar[list | tuple] = ContextVar("pin_scope", default=())
+
+
+def _scoped(fn: Callable) -> Callable:
+    """Run ``fn`` inside a pin scope (operators/_pin.py). A top-level
+    entry first unpersists what this context's previous top-level
+    invocation pinned, so no run reads an earlier run's blocks. A
+    nested entry (a capstone calling a component query) joins the
+    open scope."""
 
     @functools.wraps(fn)
-    def wrapped(spark, sf_dir, *args, **kwargs):
-        from .operators import _pin
-
-        if _pin._DEPTH == 0:
-            _pin.clear_application_pins(spark)
-        _pin._DEPTH += 1
+    def wrapped(*args, **kwargs):
+        left = SCOPE.get()
+        if isinstance(left, list):
+            return fn(*args, **kwargs)
+        for df in left:
+            try:
+                df.unpersist(blocking=False)
+            except Py4JError:
+                pass  # session stopped: nothing is cached there anymore
+        SCOPE.set(frames := [])
         try:
-            return fn(spark, sf_dir, *args, **kwargs)
+            return fn(*args, **kwargs)
         finally:
-            _pin._DEPTH -= 1
+            SCOPE.set(tuple(frames))
 
     return wrapped
 
@@ -56,11 +70,11 @@ def query(name: str, oracle: str | None = None, tags: tuple = ()):  # decorator
             raise ValueError(f"duplicate query name: {name}")
         REGISTRY[name] = QuerySpec(
             name=name,
-            fn=_fresh_entry(fn),
+            fn=_scoped(fn),
             oracle=oracle,
             tags=tuple(tags),
             doc=fn.__doc__ or "",
         )
-        return fn
+        return REGISTRY[name].fn
 
     return deco

@@ -6,7 +6,10 @@ extra pass."""
 from __future__ import annotations
 
 import json
+import math
+import os
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -95,3 +98,21 @@ def test_results_identical_under_forced_spill(spark, sf_dir):
         a = canon(spec.fn(spark, sf_dir))
         b = canon(spec.fn(spill, sf_dir))
         assert a.equals(b), f"{name}: results drift under forced spilling"
+
+
+def test_fan_out_target_comes_from_plan_size_stats(spark):
+    """fan_out sizes its target from the optimizer's size estimate, a
+    private API (``_jdf.queryExecution().optimizedPlan().stats()``). If
+    a Spark upgrade breaks that call, fan_out silently falls back to
+    defaultParallelism; a tiny one-file table tells the two apart."""
+    from data_lake_with_spark_and_aws_s3_spark.sources import loader
+
+    sf_dir = "/root/testdata/sf0.001"
+    cores = spark.sparkContext.defaultParallelism
+    size = os.path.getsize(os.path.join(sf_dir, "region.parquet"))
+    expected = min(cores, max(2, math.ceil(size / loader._FAN_OUT_BYTES_PER_TASK)))
+    if expected == cores:
+        pytest.skip(f"size-derived target equals defaultParallelism ({cores})")
+    region = loader.load_table(spark, sf_dir, "region")
+    assert region.rdd.getNumPartitions() == 1
+    assert loader.fan_out(region).rdd.getNumPartitions() == expected

@@ -1,40 +1,8 @@
-"""The Arrow-vectorized pairwise-similarity strategy must produce
-BIT-IDENTICAL results to the declarative HOF strategy — same
-quantization grid, same integer arithmetic, different physical plan."""
+"""semdedup's conditional depth-2 bucket refinement
+(similarity.semdedup_keyed): planted mega-buckets split twice, small
+and mid-sized buckets keep their keying."""
 
 from __future__ import annotations
-
-import time
-
-from data_lake_with_spark_and_aws_s3_spark import REGISTRY
-from data_lake_with_spark_and_aws_s3_spark.operators.similarity_fast import (
-    embedding_neardup_fast,
-)
-
-SF = "/root/testdata/sf0.01"
-
-
-def test_fast_matches_declarative(spark):
-    slow = REGISTRY["q_embedding_neardup_exact_smallcorpus"].fn(spark, SF).collect()
-    fast = embedding_neardup_fast(spark, SF).collect()
-    canon = lambda rows: sorted((r["vec_a"], r["vec_b"], r["cosine"]) for r in rows)
-    assert canon(slow) == canon(fast)
-
-
-def test_fast_is_actually_faster_at_scale(spark):
-    sf = "/root/testdata/sf0.1"
-    t0 = time.perf_counter()
-    n_slow = REGISTRY["q_embedding_neardup_exact_smallcorpus"].fn(spark, sf).count()
-    t_slow = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    n_fast = embedding_neardup_fast(spark, sf).count()
-    t_fast = time.perf_counter() - t0
-    assert n_slow == n_fast
-    # generous bound: the matmul path must not be slower; typically ~4x faster
-    assert t_fast <= t_slow * 1.2, f"fast={t_fast:.2f}s slow={t_slow:.2f}s"
-
-
-# --- semdedup depth-2 bucket refinement (round 6, VERDICT r5 #6) -----
 
 
 def _keyed_rows(spark, rows):
