@@ -1,4 +1,5 @@
-"""Shared co-purchase edge derivation for the graph family.
+"""Shared edge derivations for the graph family: the part co-purchase
+graph and the customer<->supplier trade graph.
 
 Seven graph queries (q_label_propagation, q_modularity,
 q_copurchase_triangles, q_degree_assortativity, q_adamic_adar,
@@ -9,9 +10,8 @@ plus a pair aggregate, by far the family's largest constant (the 10x
 tiled-graph sweep measured k-core's 93.7 s wall as mostly edge
 derivation, and the suite paid that six times per session).
 
-This module derives the WEIGHTED pair table once per (application,
-sf_dir) and localCheckpoints it; every consumer is a filter over the
-checkpoint:
+This module derives the WEIGHTED pair table and localCheckpoints it;
+every consumer is a filter over the checkpoint:
 
     copurchase_pair_weights -> (pa, pb, w)   pa < pb, w = co-order count
     copurchase_edges(min_weight=1)          distinct undirected edges
@@ -35,6 +35,11 @@ cross-run result caching, which the bench methodology forbids. Each
 call now derives the pair table fresh; the eager localCheckpoint
 remains because every consumer's iterative loop references the edges
 many times WITHIN its own run.
+
+trade_edges is the symmetric customer<->supplier edge list that
+PageRank, personalized PageRank and both BFS queries walk. It is left
+unmaterialized: PageRank and BFS-hops checkpoint it eagerly, delta BFS
+lazily (its whole run is one job).
 """
 
 from __future__ import annotations
@@ -84,8 +89,28 @@ def copurchase_edges(
 ) -> DataFrame:
     """Undirected distinct edges (pa, pb), pa < pb, optionally floored
     to pairs co-ordered >= min_weight times. A narrow filter over the
-    shared checkpoint — free after the first graph query of a session."""
+    pair table this call derives and checkpoints."""
     pw = copurchase_pair_weights(spark, sf_dir)
     if min_weight > 1:
         pw = pw.filter(F.col("w") >= min_weight)
     return pw.select("pa", "pb")
+
+
+def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The undirected customer<->supplier trade graph as a symmetric
+    (src, dst) edge list: one row per direction of each distinct
+    (o_custkey, l_suppkey) pair traded through orders |><| lineitem,
+    node ids namespaced arithmetically (customer -> 2k, supplier ->
+    2k+1). Unmaterialized: each caller (PageRank, PPR, both BFS
+    queries) checkpoints it the way its own loop needs."""
+    o = load_table(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem")
+    e0 = (
+        o.join(l, o["o_orderkey"] == l["l_orderkey"])
+        .select(
+            (F.col("o_custkey") * 2).alias("src"),
+            (F.col("l_suppkey") * 2 + 1).alias("dst"),
+        )
+        .distinct()
+    )
+    return e0.unionAll(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))

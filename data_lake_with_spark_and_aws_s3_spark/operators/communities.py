@@ -52,9 +52,9 @@ def _lpa_round_sql(prev: str, out: str) -> str:
     )"""
 
 
-@query(
-    "q_label_propagation",
-    oracle=f"""
+# The LPA oracle: co-purchase backbone `ew`, its directed view `e`
+# and the labels `lab2` after _ROUNDS rounds.
+_LPA_GRAPH_SQL = f"""
     WITH pairs AS (
       SELECT a.l_orderkey, a.l_partkey AS pa, b.l_partkey AS pb
       FROM lineitem a JOIN lineitem b
@@ -74,6 +74,44 @@ def _lpa_round_sql(prev: str, out: str) -> str:
     ),
     {_lpa_round_sql("lab0", "lab1")},
     {_lpa_round_sql("lab1", "lab2")}
+"""
+
+
+def _directed(ew: DataFrame) -> DataFrame:
+    """Both orientations (src, dst) of the undirected (pa, pb) edges."""
+    return ew.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionAll(
+        ew.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
+    )
+
+
+def _lpa_labels(e: DataFrame) -> DataFrame:
+    """(v, label) after _ROUNDS synchronous LPA rounds over the directed
+    edge view e: every node seeded with its own id, each round the most
+    frequent neighbor label wins, ties to the smallest label. The
+    caller decides how e is materialized."""
+    labels = e.select(F.col("src").alias("v")).distinct().select(
+        "v", F.col("v").alias("label")
+    )
+    argmax = Window.partitionBy("v").orderBy(F.desc("c"), "label")
+    for _ in range(_ROUNDS):
+        cnt = (
+            e.join(labels, e.dst == labels.v)
+            .groupBy(F.col("src").alias("v2"), "label")
+            .agg(F.count(F.lit(1)).alias("c"))
+        )
+        labels = (
+            cnt.select(F.col("v2").alias("v"), "label", "c")
+            .withColumn("rn", F.row_number().over(argmax))
+            .filter(F.col("rn") == 1)
+            .select("v", "label")
+        )
+    return labels
+
+
+@query(
+    "q_label_propagation",
+    oracle=_LPA_GRAPH_SQL
+    + """
     SELECT v AS part_id, label AS community,
            CAST(COUNT(*) OVER (PARTITION BY label) AS BIGINT) AS community_size
     FROM lab2
@@ -103,61 +141,19 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     caching; modularity/triangles/assortativity/adamic-adar/k-core
     each pay their own derivation, as the bench requires)."""
     ew = copurchase_edges(spark, sf_dir, _MIN_COPURCHASE)
-    e = ew.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionAll(
-        ew.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-    )
     # materialize the directed view once: it feeds every LPA round and
     # the filter-over-checkpoint would otherwise replay per round
-    e = e.localCheckpoint(eager=True)
-    labels = e.select(F.col("src").alias("v")).distinct().select(
-        "v", F.col("v").alias("label")
-    )
-    argmax = Window.partitionBy("v").orderBy(F.desc("c"), "label")
-    for _ in range(_ROUNDS):
-        cnt = (
-            e.join(labels, e.dst == labels.v)
-            .groupBy(F.col("src").alias("v2"), "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        labels = (
-            cnt.select(F.col("v2").alias("v"), "label", "c")
-            .withColumn("rn", F.row_number().over(argmax))
-            .filter(F.col("rn") == 1)
-            .select("v", "label")
-        )
-    return labels.select(
+    e = _directed(ew).localCheckpoint(eager=True)
+    return _lpa_labels(e).select(
         F.col("v").alias("part_id"),
         F.col("label").alias("community"),
         F.count(F.lit(1)).over(Window.partitionBy("label")).alias("community_size"),
     )
 
 
-_MODULARITY_GRAPH_SQL = f"""
-    WITH pairs AS (
-      SELECT a.l_orderkey, a.l_partkey AS pa, b.l_partkey AS pb
-      FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
-    ew AS (
-      SELECT pa, pb FROM pairs GROUP BY pa, pb
-      HAVING COUNT(*) >= {_MIN_COPURCHASE}
-    ),
-    e AS (
-      SELECT pa AS src, pb AS dst FROM ew
-      UNION ALL
-      SELECT pb AS src, pa AS dst FROM ew
-    ),
-    lab0 AS (
-      SELECT DISTINCT src AS v, src AS label FROM e
-    ),
-    {_lpa_round_sql("lab0", "lab1")},
-    {_lpa_round_sql("lab1", "lab2")}
-"""
-
-
 @query(
     "q_modularity",
-    oracle=_MODULARITY_GRAPH_SQL
+    oracle=_LPA_GRAPH_SQL
     + """
     , m_scalar AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS m FROM ew
@@ -199,34 +195,17 @@ def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     / (4*m^2) with one division left to the reader — nothing floats,
     nothing quantizes.
 
-    The community labels replay q_label_propagation's two synchronous
-    rounds exactly (same tie-breaks); intra-community edges come from
-    one label-keyed self-annotation of the edge list (two equi-joins,
-    never pairwise in anything but the bounded basket build); the
-    1-row m scalar broadcasts (NLJ-allowlisted). Edge derivation is the
-    family-shared checkpoint (_edges.copurchase_edges)."""
-    # filter-over-shared-checkpoint; feeds edges, m, and the LPA rounds
+    The community labels come from q_label_propagation's own loop
+    (_lpa_labels, same rounds and tie-breaks); intra-community edges
+    come from one label-keyed self-annotation of the edge list (two
+    equi-joins, never pairwise in anything but the bounded basket
+    build); the 1-row m scalar broadcasts (NLJ-allowlisted). Edge
+    derivation is the family-shared _edges.copurchase_edges."""
+    # filter over this call's pair checkpoint; feeds edges, m, and the
+    # LPA rounds
     ew = copurchase_edges(spark, sf_dir, _MIN_COPURCHASE)
-    e = ew.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionAll(
-        ew.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-    )
-    labels = e.select(F.col("src").alias("v")).distinct().select(
-        "v", F.col("v").alias("label")
-    )
-    argmax = Window.partitionBy("v").orderBy(F.desc("c"), "label")
-    for _ in range(_ROUNDS):
-        cnt = (
-            e.join(labels, e.dst == labels.v)
-            .groupBy(F.col("src").alias("v2"), "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        labels = (
-            cnt.select(F.col("v2").alias("v"), "label", "c")
-            .withColumn("rn", F.row_number().over(argmax))
-            .filter(F.col("rn") == 1)
-            .select("v", "label")
-        )
-    labels = labels.localCheckpoint(eager=True)  # feeds deg join AND intra join
+    e = _directed(ew)
+    labels = _lpa_labels(e).localCheckpoint(eager=True)  # feeds deg AND intra joins
     m_scalar = ew.agg(F.count(F.lit(1)).alias("m"))
     deg = e.groupBy(F.col("src").alias("v")).agg(F.count(F.lit(1)).alias("d"))
     la = labels.select(F.col("v").alias("src"), F.col("label").alias("l_src"))

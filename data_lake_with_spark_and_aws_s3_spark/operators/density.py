@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.loader import fan_out, load_table
-from .graph import connected_components_star
+from .graph import connected_components
 
 _EPS = 200       # cell width in 1e-4 embedding units (0.02)
 _MINPTS = 10     # points in the 3x3 neighborhood for a dense cell
@@ -131,8 +131,8 @@ def q_grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spark side runs the component step with the shared large-star /
     small-star CC (operators/graph.py — grid regions snake, so their
-    diameter grows with the grid and min-label propagation would need
-    O(diameter) rounds; star contraction is O(log^2 n) regardless); the oracle replays it as a
+    diameter grows with the grid; star contraction is O(log^2 n)
+    rounds regardless); the oracle replays it as a
     recursive-CTE transitive closure over the same dense-cell edges —
     both bounded by |occupied cells|, not |points| (module docstring
     has the why)."""
@@ -186,7 +186,7 @@ def q_grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedges = ddonors.join(
         dense.select(F.col("ck").alias("dst")), "dst"
     ).select("src", "dst")
-    comp = connected_components_star(
+    comp = connected_components(
         dedges, dense.select(F.col("ck").alias("id"))
     ).select(F.col("id").alias("ck"), F.col("component").alias("cluster"))
     # minimum cluster each dense cell offers to its 3x3 neighborhood

@@ -150,7 +150,7 @@ def q_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     under-merge (A~B, B~C); the closure is what makes the entity.
 
     Plan: blocked candidate pairs (equi-join on the block key) ->
-    iterative min-label components (diameter-bounded) -> one
+    star-contraction components (graph.connected_components) -> one
     members join on name -> two small keyed aggregates (votes,
     survivorship). Nothing is pairwise outside the bounded blocks.
     Oracle: same pipeline with a recursive-CTE closure."""

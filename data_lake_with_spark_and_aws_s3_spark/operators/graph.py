@@ -1,17 +1,17 @@
-"""Iterative graph operator: distributed connected components, used
-for TRUE near-duplicate clustering (pairs -> transitive groups).
+"""Iterative graph operators: distributed connected components, used
+for TRUE near-duplicate clustering (pairs -> transitive groups), and
+the BFS, k-core and truss queries over the trade and co-purchase
+graphs.
 
-Spark has no native connected-components; this is min-label
-propagation as iterative DataFrame joins — the simplest member of the
-small-star/large-star family (Kiveris et al., "Connected Components
-in MapReduce and Beyond", SOCC'14):
-
-    label(v) <- min(label(v), min over neighbors u of label(u))
-
-repeated to fixpoint. Each iteration is one join + one aggregate
-(both key-shuffles); iteration count is bounded by the component
-diameter (near-dup clusters: tiny). localCheckpoint() every iteration
-cuts the lineage so plans don't grow O(iterations).
+Spark has no native connected-components; `connected_components` is
+alternating large-star / small-star contraction (Kiveris et al.,
+"Connected Components in MapReduce and Beyond", SOCC'14), every vertex
+labeled with the min id it can reach. Star contraction converges in
+O(log^2 n) rounds whatever the component diameter — the min-label
+propagation it replaced needed O(diameter) rounds and failed to
+converge on a >20-hop semdedup graph at 10x (SCALE.md, round 5).
+Graphs up to _CC_DRIVER_MAX_EDGES edges skip the loop for a driver
+union-find with the same min-id labels.
 
 The oracle checks the SAME semantics with DuckDB's recursive CTE
 (transitive closure + min-over-reachable) — feasible at test scale,
@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.loader import load_table
-from ._edges import copurchase_edges
+from ._edges import copurchase_edges, trade_edges
 
 _JACCARD_EDGES_SQL = """
     WITH tok AS (
@@ -41,85 +41,6 @@ _JACCARD_EDGES_SQL = """
             / (len(a.ts) + len(b.ts) - len(list_intersect(a.ts, b.ts))) >= 0.8
     )
 """
-
-
-def connected_components(
-    edges: DataFrame, vertices: DataFrame, max_iter: int = 20
-) -> DataFrame:
-    """(vertex, component) with component = min vertex id reachable.
-
-    edges: columns (src, dst), undirected semantics (symmetrized
-    here). vertices: column (id) — isolated vertices keep their own
-    id. Converges in <= diameter iterations; raises if max_iter is
-    hit with changes still flowing (diameter larger than expected).
-    """
-    # Materialize the (possibly expensive) edge derivation ONCE — the
-    # loop below references sym every iteration and would otherwise
-    # recompute its full upstream lineage (e.g. a blocked quadratic
-    # Jaccard join) per iteration.
-    sym = (
-        edges.select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    # r8 small-graph short-circuit (same size guard and rationale as
-    # connected_components_star). r9: the checkpoint is LAZY and this
-    # count is the action that materializes it — one job does both
-    # (the former eager checkpoint + count pair was two jobs); below
-    # the cap a driver union-find replaces the whole propagation loop,
-    # above it nothing changes.
-    if sym.count() <= _CC_DRIVER_MAX_EDGES:
-        lab = _driver_union_find_labels(sym)
-        if not lab:
-            return vertices.select("id", F.col("id").alias("component"))
-        lab_df = _union_find_label_frame(sym, lab)
-        return vertices.join(
-            F.broadcast(lab_df), vertices.id == lab_df.v, "left"
-        ).select("id", F.coalesce("label", "id").alias("component"))
-    # Iterate ONLY over edge-incident vertices. In a dedup graph the
-    # overwhelming majority of vertices are isolated (unique docs);
-    # keeping them out of the loop shrinks every per-iteration shuffle
-    # from |V| to |V_dup| — at 100 TB that is the difference between
-    # re-shuffling the whole corpus per round and re-shuffling just the
-    # duplicate neighborhoods. Isolated vertices are attached at the
-    # end with their own id (no join ever sees them).
-    labels = sym.select(F.col("src").alias("v")).distinct().select(
-        "v", F.col("v").alias("label")
-    )
-    for _ in range(max_iter):
-        # candidate label via neighbors
-        nbr = (
-            sym.join(labels, sym.dst == labels.v)
-            .groupBy(F.col("src").alias("v2"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        # change detection folded into the label update: `changed` is a
-        # per-row flag, counted from the already-materialized result —
-        # no extra old-vs-new join+shuffle per iteration.
-        new_labels = labels.join(nbr, labels.v == nbr.v2, "left").select(
-            "v",
-            F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))).alias(
-                "label"
-            ),
-            F.coalesce(F.col("nbr_label") < F.col("label"), F.lit(False)).alias("changed"),
-        )
-        # r8: lazy checkpoint + full-coverage aggregate = ONE job per
-        # round (materializes the checkpoint AND answers "changed?");
-        # the former eager checkpoint + limit(1).count() pair was two.
-        new_labels = new_labels.localCheckpoint(eager=False)
-        changed = new_labels.agg(
-            F.coalesce(F.max(F.col("changed").cast("int")), F.lit(0))
-        ).collect()[0][0]
-        labels = new_labels.select("v", "label")
-        if changed == 0:
-            return vertices.join(labels, vertices.id == labels.v, "left").select(
-                "id", F.coalesce("label", "id").alias("component")
-            )
-    raise RuntimeError(f"connected_components did not converge in {max_iter} iterations")
-    # For graphs whose diameter is NOT near-dup-tiny, use
-    # connected_components_star below: O(log^2 n) rounds regardless of
-    # diameter.
 
 
 def _dedup_edges(e: DataFrame) -> DataFrame:
@@ -151,13 +72,15 @@ def _small_star(e: DataFrame) -> DataFrame:
     return _dedup_edges(relink.unionByName(self_link))
 
 
-# Edge-count ceiling for the driver union-find short-circuit in both
-# CC variants: 200k edges x 16 bytes is a few MB of driver state — the
-# same order as the k-core broadcast guard — while every shipped SF's
-# near-dup / grid graph is orders of magnitude below it and a 100 TB
-# corpus graph is orders of magnitude above (taking the distributed
-# loop unchanged).
+# Edge-count ceiling for the driver union-find short-circuit: 200k
+# edges x 16 bytes is a few MB of driver state — the same order as the
+# k-core broadcast guard — while every shipped SF's CC graph is below
+# it (largest at sf0.1: the exact small-corpus Jaccard graph, ~38k
+# edges) and a 100 TB corpus graph is orders of magnitude above
+# (taking the distributed loop unchanged).
 _CC_DRIVER_MAX_EDGES = 200_000
+# Star rounds before the distributed loop gives up and raises.
+_CC_MAX_ROUNDS = 30
 
 
 def _driver_union_find_labels(e: DataFrame) -> dict:
@@ -201,22 +124,19 @@ def _union_find_label_frame(e: DataFrame, labels: dict) -> DataFrame:
     return e.sparkSession.createDataFrame(sorted(labels.items()), schema=schema)
 
 
-def connected_components_star(
-    edges: DataFrame, vertices: DataFrame, max_iter: int = 30
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    contractions (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", SOCC'14). Same output contract as
-    connected_components: (id, component = min reachable id).
+def connected_components(edges: DataFrame, vertices: DataFrame) -> DataFrame:
+    """(id, component) with component = min vertex id reachable, via
+    alternating large-star / small-star contractions (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SOCC'14).
 
-    Why a second implementation: min-label propagation needs
-    O(diameter) rounds — perfect for near-dup clusters (diameter 2-3),
-    pathological for chain-shaped graphs. Star contraction halves
-    component height per round pair, converging in O(log^2 n) rounds
-    INDEPENDENT of diameter, with near-linear shuffle per round — the
-    variant to reach for at 100 TB when component shapes are unknown.
-    Each round is two grouped aggregates + joins on the (shrinking)
-    edge set; lineage cut per round via localCheckpoint.
+    edges: columns (src, dst), undirected semantics, self-loops and
+    duplicates allowed. vertices: column (id) — isolated vertices keep
+    their own id. Star contraction halves component height per round
+    pair, converging in O(log^2 n) rounds INDEPENDENT of diameter, with
+    near-linear shuffle per round. Each round is two grouped aggregates
+    + joins on the (shrinking) edge set; lineage cut per round via
+    localCheckpoint. Raises RuntimeError if _CC_MAX_ROUNDS rounds pass
+    with the edge set still changing.
 
     Convergence: the edge set is a fixpoint of both stars exactly when
     every component is a star rooted at its minimum; detected by an
@@ -262,7 +182,7 @@ def connected_components_star(
         return vertices.join(
             F.broadcast(lab_df), vertices.id == lab_df.v, "left"
         ).select("id", F.coalesce("label", "id").alias("component"))
-    for _ in range(max_iter):
+    for _ in range(_CC_MAX_ROUNDS):
         e = _small_star(_large_star(e)).localCheckpoint(eager=False)
         new_fp = fingerprint(e)
         if new_fp == fp:
@@ -272,7 +192,7 @@ def connected_components_star(
                 "id", F.coalesce("label", "id").alias("component")
             )
         fp = new_fp
-    raise RuntimeError(f"connected_components_star did not converge in {max_iter} rounds")
+    raise RuntimeError(f"connected_components did not converge in {_CC_MAX_ROUNDS} rounds")
 
 
 @query(
@@ -311,7 +231,7 @@ def q_dedup_clusters_exact_smallcorpus(spark: SparkSession, sf_dir: str) -> Data
     Semantics: Jaccard >= 0.8 pairs grown to transitive components,
     every doc labeled with its cluster's min doc_id.
 
-    Spark side: iterative min-label propagation (see
+    Spark side: star-contraction components (see
     connected_components). Oracle: DuckDB recursive-CTE transitive
     closure — same fixpoint, declarative form.
 
@@ -409,8 +329,8 @@ def q_identity_stitching(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the gated edge list is tiny relative to events (one
     groupBy); CC cost is bounded by the identity-graph size, not the
-    event volume — see connected_components for the per-iteration
-    shuffle story and connected_components_star for unknown shapes."""
+    event volume — see connected_components for the per-round
+    shuffle story."""
     e = load_table(spark, sf_dir, "events")
     ud = (
         e.select(
@@ -521,7 +441,7 @@ def _lsh_cluster_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
     vertices = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("id")
     )
-    cc = connected_components_star(edges, vertices)
+    cc = connected_components(edges, vertices)
     return cc.select(F.col("id").alias("doc_id"), F.col("component").alias("cluster_id"))
 
 
@@ -593,9 +513,10 @@ def _bfs_oracle() -> str:
 )
 def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source BFS hop distance (unweighted shortest path) on the
-    undirected customer<->supplier trade graph (same edge derivation as
-    q_pagerank), seeded from the first five suppliers (present at every SF); nodes not reached
-    within 3 rounds are absent from the output.
+    undirected customer<->supplier trade graph (_edges.trade_edges,
+    shared with PageRank), seeded from the first five suppliers
+    (present at every SF); nodes not reached within 3 rounds are
+    absent from the output.
 
     The Pregel-style frontier loop as DataFrames: each round is ONE
     edge equi-join (expand the current distance table along edges) plus
@@ -606,30 +527,15 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ops: q_pagerank, q_kmeans_lloyd). All values are exact ints.
 
     100 TB posture: the full-distance-table rejoin is the simple
-    textbook form; the production refinement is delta-frontier BFS
-    (expand only nodes whose label changed last round — frontier
-    shrinks geometrically on small-diameter graphs) plus
-    localCheckpoint per round to cut lineage, as connected_components
-    does. Edge list shuffles on src each round; co-partitioning with
-    the distance table makes rounds 2+ exchange-free on a real
-    cluster."""
-    o = load_table(spark, sf_dir, "orders")
-    l = load_table(spark, sf_dir, "lineitem")
+    textbook form; the production refinement is q_bfs_delta_frontier
+    (expand only nodes first reached last round — the frontier
+    shrinks geometrically on small-diameter graphs — with a
+    localCheckpoint per round to cut lineage). Edge list shuffles on
+    src each round; co-partitioning with the distance table makes
+    rounds 2+ exchange-free on a real cluster."""
     s = load_table(spark, sf_dir, "supplier")
-
-    e0 = (
-        o.join(l, o["o_orderkey"] == l["l_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).alias("u"),
-            (F.col("l_suppkey") * 2 + 1).alias("v"),
-        )
-        .distinct()
-    )
-    und = e0.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-        e0.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    )
     # evaluated once, reused every round (join+distinct is the costly part)
-    und = und.localCheckpoint(eager=True)
+    und = trade_edges(spark, sf_dir).localCheckpoint(eager=True)
 
     dist = s.filter(F.col("s_suppkey") < 5).select(
         (F.col("s_suppkey") * 2 + 1).alias("node"),
@@ -679,21 +585,8 @@ def q_bfs_delta_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-rejoin variant pays the 10x edge scan every round. The
     remaining refinement on a real cluster is co-partitioning the edge
     list with the frontier (exchange-free rounds 2+)."""
-    o = load_table(spark, sf_dir, "orders")
-    l = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
-
-    e0 = (
-        o.join(l, o["o_orderkey"] == l["l_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).alias("u"),
-            (F.col("l_suppkey") * 2 + 1).alias("v"),
-        )
-        .distinct()
-    )
-    und = e0.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-        e0.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    ).localCheckpoint(eager=False)
+    und = trade_edges(spark, sf_dir).localCheckpoint(eager=False)
 
     # checkpoint the FRONTIER each round (it is joined next round and
     # anti-joined forever after); dist stays a cheap union of the <= 4

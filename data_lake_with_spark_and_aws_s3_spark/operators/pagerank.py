@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.loader import load_table
+from ._edges import trade_edges
 
 ONE = 1_000_000_000_000  # rank 1.0 in scaled-int units
 ITERS = 3
@@ -110,23 +111,11 @@ def _trade_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
     """The namespaced trade-graph ``vertices`` (node) and the
     checkpointed symmetric edge list with static out-degrees
     (src, dst, outdeg) that every PageRank iteration joins ranks into."""
-    o = load_table(spark, sf_dir, "orders")
-    l = load_table(spark, sf_dir, "lineitem")
     c = load_table(spark, sf_dir, "customer")
     s = load_table(spark, sf_dir, "supplier")
-
-    e0 = (
-        o.join(l, o["o_orderkey"] == l["l_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).alias("src"),
-            (F.col("l_suppkey") * 2 + 1).alias("dst"),
-        )
-        .distinct()
-    )
-    sym = e0.unionAll(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     # Edge derivation (join+distinct) feeds every iteration — evaluate
     # it once, not ITERS times (same rationale as graph.py).
-    sym = sym.localCheckpoint(eager=True)
+    sym = trade_edges(spark, sf_dir).localCheckpoint(eager=True)
 
     vertices = (
         c.select((F.col("c_custkey") * 2).alias("node"))

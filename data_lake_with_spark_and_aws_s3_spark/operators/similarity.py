@@ -1229,11 +1229,11 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket^2), never corpus^2); components use STAR CONTRACTION
     (O(log^2 n) rounds independent of diameter) — the round-5 growth
     sweep's synthetic tiles produced a >20-hop chain-shaped dup graph
-    that min-label propagation could not finish, exactly the failure
-    mode connected_components_star exists for. This is the 100 TB
+    that min-label propagation could not finish, which is why star
+    contraction is the engine's only CC routine. This is the 100 TB
     semantic-dedup recipe: embed once, bucket, verify inside buckets,
     cluster, keep representatives."""
-    from .graph import connected_components_star
+    from .graph import connected_components
 
     # r8: fan_out — the posexplode+quantize signature stage and the
     # verify-side dot products are per-row heavy on a one-task scan
@@ -1309,7 +1309,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("src", "dst")
     )
-    comp = connected_components_star(edges, e.select(F.col("vec_id").alias("id")))
+    comp = connected_components(edges, e.select(F.col("vec_id").alias("id")))
     return comp.select(
         F.col("id").alias("vec_id"),
         "component",

@@ -1168,6 +1168,46 @@ def q_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _europe_arms(spark: SparkSession, sf_dir: str, *extra) -> DataFrame:
+    """Orders labeled by A/B arm — grp = 'treat' for customers of
+    EUROPE, 'control' for the rest — with the order value in exact
+    cents, plus any `extra` columns evaluated over the star join."""
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region")
+    return (
+        o.join(F.broadcast(c), F.col("c_custkey") == F.col("o_custkey"))
+        .join(F.broadcast(n), F.col("n_nationkey") == F.col("c_nationkey"))
+        .join(F.broadcast(r), F.col("r_regionkey") == F.col("n_regionkey"))
+        .select(
+            F.when(F.col("r_name") == "EUROPE", "treat")
+            .otherwise("control")
+            .alias("grp"),
+            *extra,
+            F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)").alias("cents"),
+        )
+    )
+
+
+def _arm_moments(labeled: DataFrame) -> DataFrame:
+    """One row of exact per-arm cent moments: (n1, s1, ss1) for treat
+    and (n2, s2, ss2) for control — count, sum, and DECIMAL(38,0) sum
+    of squares."""
+    m = labeled.groupBy("grp").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("cents").alias("s"),
+        F.sum(F.expr("CAST(cents AS DECIMAL(38,0)) * cents")).alias("ss"),
+    )
+    a = m.filter(F.col("grp") == "treat").select(
+        F.col("n").alias("n1"), F.col("s").alias("s1"), F.col("ss").alias("ss1")
+    )
+    b = m.filter(F.col("grp") == "control").select(
+        F.col("n").alias("n2"), F.col("s").alias("s2"), F.col("ss").alias("ss2")
+    )
+    return a.join(F.broadcast(b))
+
+
 @query(
     "q_diff_in_diff",
     oracle="""
@@ -1214,28 +1254,15 @@ def q_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one broadcast star join + one 4-cell aggregate; the
     estimator never touches raw rows again."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region")
-    labeled = (
-        o.join(F.broadcast(c), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(n), F.col("n_nationkey") == F.col("c_nationkey"))
-        .join(F.broadcast(r), F.col("r_regionkey") == F.col("n_regionkey"))
-        .select(
-            F.when(F.col("r_name") == "EUROPE", "treat")
-            .otherwise("control")
-            .alias("grp"),
-            F.when(
-                F.col("o_orderdate") >= F.lit("1998-07-01").cast("timestamp"),
-                "post",
-            )
-            .otherwise("pre")
-            .alias("period"),
-            F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)").alias(
-                "cents"
-            ),
+    labeled = _europe_arms(
+        spark,
+        sf_dir,
+        F.when(
+            F.col("o_orderdate") >= F.lit("1998-07-01").cast("timestamp"),
+            "post",
         )
+        .otherwise("pre")
+        .alias("period"),
     )
     cells = labeled.groupBy("grp", "period").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1358,35 +1385,7 @@ def q_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one broadcast star join, one 2-group moment aggregate;
     the test statistic is scalar arithmetic on 2 rows."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region")
-    labeled = (
-        o.join(F.broadcast(c), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(n), F.col("n_nationkey") == F.col("c_nationkey"))
-        .join(F.broadcast(r), F.col("r_regionkey") == F.col("n_regionkey"))
-        .select(
-            F.when(F.col("r_name") == "EUROPE", "treat")
-            .otherwise("control")
-            .alias("grp"),
-            F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)").alias(
-                "cents"
-            ),
-        )
-    )
-    m = labeled.groupBy("grp").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("cents").alias("s"),
-        F.sum(F.expr("CAST(cents AS DECIMAL(38,0)) * cents")).alias("ss"),
-    )
-    a = m.filter(F.col("grp") == "treat").select(
-        F.col("n").alias("n1"), F.col("s").alias("s1"), F.col("ss").alias("ss1")
-    )
-    b = m.filter(F.col("grp") == "control").select(
-        F.col("n").alias("n2"), F.col("s").alias("s2"), F.col("ss").alias("ss2")
-    )
-    w = a.join(F.broadcast(b))
+    w = _arm_moments(_europe_arms(spark, sf_dir))
     return w.select(
         "n1",
         "s1",
@@ -1461,24 +1460,9 @@ def q_quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one star join + per-group value histogram; the decile
     grid is a constant 9-row broadcast; everything after the
     histogram runs on |distinct cents| rows per group."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region")
-    labeled = (
-        o.join(F.broadcast(c), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(n), F.col("n_nationkey") == F.col("c_nationkey"))
-        .join(F.broadcast(r), F.col("r_regionkey") == F.col("n_regionkey"))
-        .select(
-            F.when(F.col("r_name") == "EUROPE", "treat")
-            .otherwise("control")
-            .alias("grp"),
-            F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)").alias(
-                "cents"
-            ),
-        )
+    h = _europe_arms(spark, sf_dir).groupBy("grp", "cents").agg(
+        F.count(F.lit(1)).alias("cnt")
     )
-    h = labeled.groupBy("grp", "cents").agg(F.count(F.lit(1)).alias("cnt"))
     cum = h.select(
         "grp",
         "cents",
@@ -1981,26 +1965,13 @@ def q_sequential_monitoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative sums under a 2-partition window over ~84 month rows,
     then scalar algebra per interim row. Raw data is touched once
     regardless of how many interim looks the trajectory has."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region")
-    labeled = (
-        o.join(F.broadcast(c), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(n), F.col("n_nationkey") == F.col("c_nationkey"))
-        .join(F.broadcast(r), F.col("r_regionkey") == F.col("n_regionkey"))
-        .select(
-            F.when(F.col("r_name") == "EUROPE", "treat")
-            .otherwise("control")
-            .alias("grp"),
-            F.expr(
-                "(year(CAST(o_orderdate AS DATE)) * 12"
-                " + month(CAST(o_orderdate AS DATE)) - 1)"
-            ).alias("mkey"),
-            F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)").alias(
-                "cents"
-            ),
-        )
+    labeled = _europe_arms(
+        spark,
+        sf_dir,
+        F.expr(
+            "(year(CAST(o_orderdate AS DATE)) * 12"
+            " + month(CAST(o_orderdate AS DATE)) - 1)"
+        ).alias("mkey"),
     )
     magg = labeled.groupBy("grp", "mkey").agg(
         F.count(F.lit(1)).alias("n"),
@@ -2619,33 +2590,7 @@ def q_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one broadcast star join, one 2-group moment aggregate
     (map-side combinable), scalar arithmetic on 2 rows."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region")
-    labeled = (
-        o.join(F.broadcast(c), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(n), F.col("n_nationkey") == F.col("c_nationkey"))
-        .join(F.broadcast(r), F.col("r_regionkey") == F.col("n_regionkey"))
-        .select(
-            F.when(F.col("r_name") == "EUROPE", "treat")
-            .otherwise("control")
-            .alias("grp"),
-            F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)").alias("cents"),
-        )
-    )
-    m = labeled.groupBy("grp").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("cents").alias("s"),
-        F.sum(F.expr("CAST(cents AS DECIMAL(38,0)) * cents")).alias("ss"),
-    )
-    a = m.filter(F.col("grp") == "treat").select(
-        F.col("n").alias("n1"), F.col("s").alias("s1"), F.col("ss").alias("ss1")
-    )
-    b = m.filter(F.col("grp") == "control").select(
-        F.col("n").alias("n2"), F.col("s").alias("s2"), F.col("ss").alias("ss2")
-    )
-    w = a.join(F.broadcast(b))
+    w = _arm_moments(_europe_arms(spark, sf_dir))
     terms = w.select(
         "n1",
         "n2",

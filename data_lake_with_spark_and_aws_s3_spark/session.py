@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 # Confs that are safe (and necessary) to set on an already-running
@@ -30,12 +31,19 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+# Confs that results depend on (events.parquet decoding, UTC time
+# functions): failing to set one of these must not go unnoticed.
+_REQUIRED_CONFS = ("spark.sql.legacy.parquet.nanosAsLong", "spark.sql.session.timeZone")
+
+
 def apply_runtime_confs(spark: SparkSession) -> None:
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # read-only conf on this build — keep going
+        except AnalysisException:
+            if k in _REQUIRED_CONFS:
+                raise
+            # a tuning conf this build will not change at runtime — keep going
 
 
 def get_spark(
@@ -56,9 +64,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    # getOrCreate applies these to an already-running session too (as
+    # its modifiable settings), so no apply_runtime_confs call follows
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    apply_runtime_confs(spark)
     return spark

@@ -39,20 +39,12 @@ N_CHUNKS = 4
 def _child(sf_dir: str, start: int, end: int) -> None:
     import pandas as pd  # noqa: F401
 
-    from pyspark.sql import SparkSession
-
     from data_lake_with_spark_and_aws_s3_spark import REGISTRY
+    from data_lake_with_spark_and_aws_s3_spark.session import get_spark
     from tests.parity import _canon
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        # match session.py's heap — the 1g default OOMs on the heavy
-        # near-dup/clusters queries at sf0.1
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    # SPARK_GRAFT_CPUS / SPARK_DRIVER_MEMORY size the session to the host
+    spark = get_spark(app_name="determinism-check")
     spark.sparkContext.setLogLevel("ERROR")
     names = sorted(REGISTRY)
     out: dict[str, str] = {}

@@ -62,6 +62,7 @@ def main() -> None:
         from pyspark.sql import SparkSession
 
         import __spark_entry__ as entrymod
+        from data_lake_with_spark_and_aws_s3_spark.sources.loader import TABLES
         from parity import assert_frames_match
 
         # vanilla session, the driver's way: no engine confs
@@ -73,10 +74,7 @@ def main() -> None:
         spark.sparkContext.setLogLevel("ERROR")
 
         con = duckdb.connect()
-        for t in [
-            "region", "nation", "customer", "supplier", "part",
-            "orders", "lineitem", "events", "documents", "embeddings",
-        ]:
+        for t in TABLES:
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM "
                 f"read_parquet('{sf_dir}/{t}.parquet')"

@@ -10,6 +10,7 @@ Usage: python scripts/growth_sweep.py [--quick]  (--quick: 1x/3x only)
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 import time
@@ -20,6 +21,10 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F  # noqa: E402
 
 from data_lake_with_spark_and_aws_s3_spark import REGISTRY  # noqa: E402
+from data_lake_with_spark_and_aws_s3_spark.operators._edges import (  # noqa: E402
+    copurchase_pair_weights,
+    trade_edges,
+)
 from data_lake_with_spark_and_aws_s3_spark.session import get_spark  # noqa: E402
 from data_lake_with_spark_and_aws_s3_spark.sources.loader import load_table  # noqa: E402
 
@@ -285,39 +290,40 @@ def corpus_tokens(spark, sf_dir):
 # graph, |E| exactly linear in mult, degree distribution preserved).
 # Run with --graph to sweep this family instead of FAMILIES.
 GRAPH_FAMILIES = {
-    # edge currency: distinct (custkey, suppkey) trade pairs
-    "q_bfs_hops": lambda spark, d: {"trade_edges": trade_edges(spark, d)},
+    # edge currency: rows of the symmetric trade-graph edge list
+    # (2 x distinct (custkey, suppkey) trade pairs)
+    "q_bfs_hops": lambda spark, d: {"trade_edges": trade_edge_count(spark, d)},
     "q_bfs_delta_frontier": lambda spark, d: {
-        "trade_edges": trade_edges(spark, d)
+        "trade_edges": trade_edge_count(spark, d)
     },
     "q_hits_hubs_authorities": lambda spark, d: {
-        "trade_edges": trade_edges(spark, d)
+        "trade_edges": trade_edge_count(spark, d)
     },
     # edge currency: distinct part-part co-purchase pairs (the
     # per-order quadratic term is bounded by order size, so the count
     # itself is linear in orders)
     "q_label_propagation": lambda spark, d: {
-        "copurchase_edges": copurchase_edges(spark, d)
+        "copurchase_edges": copurchase_pair_count(spark, d)
     },
     "q_kcore_peel": lambda spark, d: {
-        "copurchase_edges": copurchase_edges(spark, d)
+        "copurchase_edges": copurchase_pair_count(spark, d)
     },
     # round-8 session-3: per-edge triangle support — the wedge join
-    # shares q_adamic_adar's sum(deg^2) envelope over the shared edge
-    # checkpoint; currency is the edge count
+    # shares q_adamic_adar's sum(deg^2) envelope; currency is the edge
+    # count
     "q_truss_support": lambda spark, d: {
-        "copurchase_edges": copurchase_edges(spark, d)
+        "copurchase_edges": copurchase_pair_count(spark, d)
     },
     # round 7: seed-teleport PPR — same per-iteration dataflow as
     # q_pagerank but rank vectors stay sparse; the sweep shows wall
     # growing with the edge list, not with reached-set blowup
     "q_personalized_pagerank": lambda spark, d: {
-        "trade_edges": trade_edges(spark, d)
+        "trade_edges": trade_edge_count(spark, d)
     },
     # round-8 session-2: per-node LCC shares the triangle family's
-    # sum(deg^2) wedge-join bound over the shared edge checkpoint
+    # sum(deg^2) wedge-join bound
     "q_local_clustering": lambda spark, d: {
-        "copurchase_edges": copurchase_edges(spark, d)
+        "copurchase_edges": copurchase_pair_count(spark, d)
     },
 }
 
@@ -335,24 +341,18 @@ FAMILIES["q_streaming_neardup_exec"] = lambda spark, d: {
 }
 
 
-def trade_edges(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    l = load_table(spark, sf_dir, "lineitem")
-    return (
-        o.join(l, o["o_orderkey"] == l["l_orderkey"])
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-        .count()
-    )
+@functools.cache
+def trade_edge_count(spark, sf_dir):
+    """Rows of the symmetric trade-graph edge list, counted once per
+    scale dir."""
+    return trade_edges(spark, sf_dir).count()
 
 
-def copurchase_edges(spark, sf_dir):
-    # reads the family-shared checkpoint (warmed by the explicit
-    # shared-derivation timing row in main), so the aux count is free
-    from data_lake_with_spark_and_aws_s3_spark.operators._edges import (
-        copurchase_pair_weights,
-    )
-
+@functools.cache
+def copurchase_pair_count(spark, sf_dir):
+    """Distinct part-part co-purchase pairs, counted once per scale
+    dir: copurchase_pair_weights re-derives the whole basket self-join
+    on every call, so the number is cached here instead."""
     return copurchase_pair_weights(spark, sf_dir).count()
 
 
@@ -381,18 +381,14 @@ def main() -> None:
     spark = get_spark(app_name="growth-sweep")
     rows = []
     if graph:
-        # Round 5: the co-purchase edge derivation is shared across the
-        # six graph queries (operators/_edges.py). Time it COLD once per
-        # scale dir here, so every per-query row below measures the
-        # algorithm itself over a warm checkpoint — the derivation cost
-        # appears once in the table instead of inside six rows.
-        from data_lake_with_spark_and_aws_s3_spark.operators._edges import (
-            copurchase_pair_weights,
-        )
-
+        # The co-purchase edge derivation (operators/_edges.py) is
+        # shared code, not a shared checkpoint: every co-purchase row
+        # below re-derives it inside its own wall. Time it alone once
+        # per scale dir, so the table shows how much of each of those
+        # walls is derivation; the count is cached for the rows' aux.
         for label, d in dirs:
             t0 = time.perf_counter()
-            n_pairs = copurchase_pair_weights(spark, d).count()
+            n_pairs = copurchase_pair_count(spark, d)
             wall = time.perf_counter() - t0
             rows.append(
                 ("shared_copurchase_derivation", label, round(wall, 2),

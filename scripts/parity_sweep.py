@@ -6,7 +6,9 @@ find: Spark's `div` casts its result to LONG, so an intermediate
 passing 2^63 only ABOVE sf0.01 wraps silently and both the suite and
 the driver gate stay green while sf0.1 answers are garbage).
 
-Chunked across fresh JVMs like determinism_check.py. Each query gets a
+Chunked across fresh JVMs like determinism_check.py; each chunk's
+session comes from session.get_spark, so SPARK_GRAFT_CPUS and
+SPARK_DRIVER_MEMORY size it to the host. Each query gets a
 wall budget; over-budget queries are reported as SLOW (not failures) so
 quadratic *_exact_smallcorpus oracles cannot hang the sweep.
 
@@ -25,10 +27,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 N_CHUNKS = 4
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 
 def _child(sf_dir: str, start: int, end: int, budget: float) -> None:
@@ -37,18 +35,12 @@ def _child(sf_dir: str, start: int, end: int, budget: float) -> None:
 
     import duckdb
 
-    from pyspark.sql import SparkSession
-
     from data_lake_with_spark_and_aws_s3_spark import REGISTRY
+    from data_lake_with_spark_and_aws_s3_spark.session import get_spark
+    from data_lake_with_spark_and_aws_s3_spark.sources.loader import TABLES
     from tests.parity import assert_frames_match
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="parity-sweep")
     spark.sparkContext.setLogLevel("ERROR")
     duck = duckdb.connect()
     for t in TABLES:

@@ -1,16 +1,14 @@
 """Connected components cross-checked against an independent
-union-find over the same edge set (third algorithm, zero shared code
-with either the Spark iteration or the DuckDB recursive CTE)."""
+union-find over the same edge set (zero shared code with either the
+Spark star contraction or the DuckDB recursive CTE)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_lake_with_spark_and_aws_s3_spark import REGISTRY
-from data_lake_with_spark_and_aws_s3_spark.operators.graph import (
-    connected_components,
-    connected_components_star,
-)
+from data_lake_with_spark_and_aws_s3_spark.operators.graph import connected_components
 from data_lake_with_spark_and_aws_s3_spark.sources.loader import load_table
 
 SF = "/root/testdata/sf0.01"
@@ -72,50 +70,13 @@ def test_components_handle_isolated_and_chain(spark):
     vertices = spark.createDataFrame([(v,) for v in [1, 2, 3, 10, 11, 99]], "id long")
     got = {r["id"]: r["component"] for r in connected_components(edges, vertices).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 99: 99}
-    star = {
-        r["id"]: r["component"]
-        for r in connected_components_star(edges, vertices).collect()
-    }
-    assert star == got
-
-
-def test_star_variant_matches_label_propagation_on_real_edges(spark):
-    """Both algorithms over the SAME Jaccard edge set must agree on
-    every (vertex, component) assignment."""
-    d = load_table(spark, SF, "documents")
-    toks = F.array_distinct(F.filter(F.split("text", " "), lambda x: x != ""))
-    t = d.select("doc_id", "lang", "source", toks.alias("ts"))
-    a = t.select(
-        F.col("doc_id").alias("src"), F.col("lang").alias("la"),
-        F.col("source").alias("sa"), F.col("ts").alias("tsa"),
-    )
-    b = t.select(
-        F.col("doc_id").alias("dst"), F.col("lang").alias("lb"),
-        F.col("source").alias("sb"), F.col("ts").alias("tsb"),
-    )
-    inter = F.size(F.array_intersect("tsa", "tsb"))
-    union = F.size("tsa") + F.size("tsb") - inter
-    edges = (
-        a.join(
-            b,
-            (F.col("la") == F.col("lb"))
-            & (F.col("sa") == F.col("sb"))
-            & (F.col("src") < F.col("dst")),
-        )
-        .filter(inter.cast("double") / union >= 0.8)
-        .select("src", "dst")
-        .localCheckpoint(eager=True)
-    )
-    vertices = d.select(F.col("doc_id").alias("id"))
-    prop = {r["id"]: r["component"] for r in connected_components(edges, vertices).collect()}
-    star = {r["id"]: r["component"] for r in connected_components_star(edges, vertices).collect()}
-    assert star == prop
 
 
 def test_star_variant_converges_on_long_chain(spark, monkeypatch):
     """A 200-node path has diameter 199 — min-label propagation would
     need ~200 rounds; star contraction must finish in O(log^2 n)
-    (well under 30) and still label every node with the chain min.
+    (well under _CC_MAX_ROUNDS) and still label every node with the
+    chain min.
     The round-8 driver union-find short-circuit is DISABLED here so
     the distributed star loop itself stays exercised."""
     from data_lake_with_spark_and_aws_s3_spark.operators import graph
@@ -126,14 +87,28 @@ def test_star_variant_converges_on_long_chain(spark, monkeypatch):
     vertices = spark.createDataFrame([(v,) for v in range(n)], "id long")
     got = {
         r["id"]: r["component"]
-        for r in connected_components_star(edges, vertices, max_iter=30).collect()
+        for r in connected_components(edges, vertices).collect()
     }
     assert got == {v: 0 for v in range(n)}
 
 
+def test_cc_raises_when_distributed_loop_does_not_converge(spark, monkeypatch):
+    """With the driver union-find disabled and a one-round cap, the
+    star loop cannot reach its fixpoint on a chain: it must raise, not
+    return half-contracted labels."""
+    from data_lake_with_spark_and_aws_s3_spark.operators import graph
+
+    monkeypatch.setattr(graph, "_CC_DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(graph, "_CC_MAX_ROUNDS", 1)
+    edges = spark.createDataFrame([(i, i + 1) for i in range(19)], "src long, dst long")
+    vertices = spark.createDataFrame([(v,) for v in range(20)], "id long")
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(edges, vertices)
+
+
 def test_cc_driver_shortcircuit_matches_distributed(spark, monkeypatch):
     """Round-8 small-graph short-circuit: below _CC_DRIVER_MAX_EDGES
-    both CC variants label via a driver union-find. Both branches must
+    connected_components labels via a driver union-find. Both branches must
     produce IDENTICAL (id, component) maps on the same graph —
     including isolated vertices, multi-component graphs, and edges
     given in arbitrary orientation."""
@@ -144,13 +119,11 @@ def test_cc_driver_shortcircuit_matches_distributed(spark, monkeypatch):
     vertices = spark.createDataFrame([(v,) for v in range(14)], "id long")
     expected = {0: 0, 1: 1, 2: 2, 3: 2, 4: 4, 5: 2, 6: 6, 7: 7, 8: 8,
                 9: 2, 10: 10, 11: 10, 12: 10, 13: 6}
-    for fn in (graph.connected_components_star, graph.connected_components):
-        fast = {r["id"]: r["component"] for r in fn(edges, vertices).collect()}
-        assert fast == expected, f"{fn.__name__} driver branch wrong"
+    fast = {r["id"]: r["component"] for r in connected_components(edges, vertices).collect()}
+    assert fast == expected, "driver branch wrong"
     monkeypatch.setattr(graph, "_CC_DRIVER_MAX_EDGES", 0)
-    for fn in (graph.connected_components_star, graph.connected_components):
-        dist = {r["id"]: r["component"] for r in fn(edges, vertices).collect()}
-        assert dist == expected, f"{fn.__name__} distributed branch wrong"
+    dist = {r["id"]: r["component"] for r in connected_components(edges, vertices).collect()}
+    assert dist == expected, "distributed branch wrong"
 
 
 def test_cc_driver_shortcircuit_string_ids(spark, monkeypatch):
@@ -166,15 +139,13 @@ def test_cc_driver_shortcircuit_string_ids(spark, monkeypatch):
     vertices = spark.createDataFrame([(v,) for v in names], "id string")
     expected = {"bolt": "bolt", "new bolt": "bolt", "newer bolt": "bolt",
                 "cam": "cam", "camshaft": "cam", "gear": "gear"}
-    for fn in (graph.connected_components_star, graph.connected_components):
-        out = fn(edges, vertices)
-        assert dict(out.dtypes) == {"id": "string", "component": "string"}
-        fast = {r["id"]: r["component"] for r in out.collect()}
-        assert fast == expected, f"{fn.__name__} driver branch wrong on string ids"
+    out = connected_components(edges, vertices)
+    assert dict(out.dtypes) == {"id": "string", "component": "string"}
+    fast = {r["id"]: r["component"] for r in out.collect()}
+    assert fast == expected, "driver branch wrong on string ids"
     monkeypatch.setattr(graph, "_CC_DRIVER_MAX_EDGES", 0)
-    for fn in (graph.connected_components_star, graph.connected_components):
-        dist = {r["id"]: r["component"] for r in fn(edges, vertices).collect()}
-        assert dist == expected, f"{fn.__name__} distributed branch wrong on string ids"
+    dist = {r["id"]: r["component"] for r in connected_components(edges, vertices).collect()}
+    assert dist == expected, "distributed branch wrong on string ids"
 
 
 def test_shared_frames_recompute_per_invocation(spark):

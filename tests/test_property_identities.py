@@ -1,7 +1,7 @@
 """Property-based identity pins (hypothesis) for round-5 load-bearing
 equivalences — randomized inputs catch the edge shapes fixtures miss:
 
-- connected_components_star == union-find ground truth on arbitrary
+- connected_components == union-find ground truth on arbitrary
   edge lists (the round-5 semdedup/cluster CC path; the fixture suite
   covers near-dup-shaped and chain graphs, this covers the rest).
 - neardup.ml_bands_maponly == the explode+aggregate band derivation
@@ -69,7 +69,7 @@ def test_star_cc_matches_union_find(spark, case):
     n, edges = case
     vertices = spark.range(n).select(F.col("id"))
     from data_lake_with_spark_and_aws_s3_spark.operators.graph import (
-        connected_components_star,
+        connected_components,
     )
 
     if edges:
@@ -78,7 +78,7 @@ def test_star_cc_matches_union_find(spark, case):
         edf = spark.createDataFrame([], "src long, dst long")
     got = {
         r["id"]: r["component"]
-        for r in connected_components_star(edf, vertices).collect()
+        for r in connected_components(edf, vertices).collect()
     }
     assert got == _uf_components(n, edges)
 
