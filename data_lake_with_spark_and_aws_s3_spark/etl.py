@@ -16,9 +16,14 @@ Semantics preserved (SURVEY.md §1.1), engineering upgraded:
 |--------------------------------------|---------------------------------------|
 | spark.read.json, inferred schema     | explicit StructType + PERMISSIVE mode |
 |   (etl.py:~33, ~78)                  |   (no inference scan at 100 TB)       |
+| read.json on a glob                  | recursive read of the directory,      |
+|   (song_data/*/*/*/*.json ~32,       |   `*.json` filter, listed on the      |
+|   log_data/*/*/*.json ~77)           |   driver (no per-file listing job)    |
 | songs select/dropDuplicates (~36-37) | same                                  |
 | songs partitionBy(year, artist_id)   | same (~41)                            |
-| artists alias-rename dedup (~44-48)  | same                                  |
+| artists alias-rename dedup (~44-48)  | most complete song row per artist,    |
+|                                      |   ties to the smallest song_id        |
+|                                      |   (deterministic template variant)    |
 | page == 'NextSong' filter (~81)      | same                                  |
 | users dropDuplicates (~86)           | LATEST level per user via row_number  |
 |                                      |   (deterministic template variant)    |
@@ -29,21 +34,28 @@ Semantics preserved (SURVEY.md §1.1), engineering upgraded:
 |                                      |   artist==artist_name), broadcast dim |
 | monotonically_increasing_id (~140)   | row_number over deterministic order   |
 | songplays partitionBy(year,month)    | same (~150)                           |
+| main(): song pass, then log pass     | both passes at once on two threads    |
+|   (~160-170)                         |   (they share no output path)         |
 
 Paths may be local or s3a:// URIs — same code either way (the
 reference reads `s3a://udacity-dend/...`; hadoop-aws handles the
 scheme, creds come from the environment as in `dl.cfg` ~10-15).
 
-Edge case (observed): if an input batch has ZERO NextSong rows, the
+Edge cases (observed): if an input batch has ZERO NextSong rows, the
 partitioned writes succeed but contain no data files, and a later
 `spark.read.parquet` on them fails with UNABLE_TO_INFER_SCHEMA unless
 a schema is supplied — standard Spark behavior for empty dynamic-
 partition datasets; readers of an incrementally-loaded lake should
-pass explicit schemas.
+pass explicit schemas. A missing `song_data` or `log_data` directory
+raises PATH_NOT_FOUND; an existing one that holds no `*.json` file
+reads as zero rows and writes empty tables.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -87,14 +99,31 @@ LOG_SCHEMA = T.StructType(
 )
 
 
+def _read_json(spark: SparkSession, root: str, schema: T.StructType) -> DataFrame:
+    """Every ``*.json`` file under ``root``, at any depth.
+
+    The reference's globs expand to one path per matched file (the
+    log glob to 30 a month), and past Spark's 32-path parallel-
+    discovery threshold every read launches a listing job with one
+    task per file. A single directory root is listed on the driver,
+    level by level; only a level with more than 32 subdirectories is
+    listed by a distributed job.
+    """
+    return (
+        spark.read.schema(schema)
+        .option("mode", "PERMISSIVE")
+        .option("recursiveFileLookup", "true")
+        .option("pathGlobFilter", "*.json")
+        .json(root)
+    )
+
+
 def process_song_data(spark: SparkSession, input_path: str, output_path: str) -> dict:
     """Songs + artists dims from the song dataset (template ~30-70).
 
     Returns the written DataFrames keyed by table name.
     """
-    df = spark.read.schema(SONG_SCHEMA).option("mode", "PERMISSIVE").json(
-        f"{input_path}/song_data/*/*/*/*.json"
-    )
+    df = _read_json(spark, f"{input_path}/song_data", SONG_SCHEMA)
 
     songs = df.select("song_id", "title", "artist_id", "year", "duration").dropDuplicates(
         ["song_id"]
@@ -104,13 +133,31 @@ def process_song_data(spark: SparkSession, input_path: str, output_path: str) ->
         f"{output_path}/songs"
     )
 
-    artists = df.select(
-        "artist_id",
-        F.col("artist_name").alias("name"),
-        F.col("artist_location").alias("location"),
-        F.col("artist_latitude").alias("latitude"),
-        F.col("artist_longitude").alias("longitude"),
-    ).dropDuplicates(["artist_id"])
+    # artists: per artist, the song row that knows most of location,
+    # latitude and longitude, ties to the smallest song_id (deterministic
+    # variant of the template's dropDuplicates, which keeps whichever
+    # row the scan meets first, so follows file order when an artist's
+    # song files disagree)
+    cols = ["name", "location", "latitude", "longitude"]
+    known = (
+        (F.coalesce(F.col("location"), F.lit("")) != "").cast("int")
+        + F.col("latitude").isNotNull().cast("int")
+        + F.col("longitude").isNotNull().cast("int")
+    )
+    w = Window.partitionBy("artist_id").orderBy(known.desc(), "song_id", *cols)
+    artists = (
+        df.select(
+            "artist_id",
+            "song_id",
+            F.col("artist_name").alias("name"),
+            F.col("artist_location").alias("location"),
+            F.col("artist_latitude").alias("latitude"),
+            F.col("artist_longitude").alias("longitude"),
+        )
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .select("artist_id", *cols)
+    )
     artists.write.mode("overwrite").parquet(f"{output_path}/artists")
 
     return {"songs": songs, "artists": artists}
@@ -119,9 +166,7 @@ def process_song_data(spark: SparkSession, input_path: str, output_path: str) ->
 def process_log_data(spark: SparkSession, input_path: str, output_path: str) -> dict:
     """Users + time dims and the songplays fact from event logs
     (template ~75-160)."""
-    log = spark.read.schema(LOG_SCHEMA).option("mode", "PERMISSIVE").json(
-        f"{input_path}/log_data/*/*/*.json"
-    )
+    log = _read_json(spark, f"{input_path}/log_data", LOG_SCHEMA)
     plays = log.filter(F.col("page") == "NextSong")
 
     # users: latest level per user (deterministic variant of the
@@ -164,9 +209,11 @@ def process_log_data(spark: SparkSession, input_path: str, output_path: str) -> 
     # songplays fact: natural-key join (song==title AND
     # artist==artist_name — fuzzy entity resolution done exactly,
     # template ~135). The song dim is the small side -> broadcast.
-    songs = spark.read.schema(SONG_SCHEMA).option("mode", "PERMISSIVE").json(
-        f"{input_path}/song_data/*/*/*/*.json"
-    ).select("song_id", "title", "artist_id", "artist_name").dropDuplicates(["song_id"])
+    songs = (
+        _read_json(spark, f"{input_path}/song_data", SONG_SCHEMA)
+        .select("song_id", "title", "artist_id", "artist_name")
+        .dropDuplicates(["song_id"])
+    )
     joined = plays.join(
         F.broadcast(songs),
         (plays.song == songs.title) & (plays.artist == songs.artist_name),
@@ -209,7 +256,29 @@ def process_log_data(spark: SparkSession, input_path: str, output_path: str) -> 
 
 def run_pipeline(spark: SparkSession, input_path: str, output_path: str) -> dict:
     """main() analog (template ~160-170): both passes, returns all
-    five written tables."""
-    out = process_song_data(spark, input_path, output_path)
-    out.update(process_log_data(spark, input_path, output_path))
+    five written tables.
+
+    The passes write disjoint tables, so they run at the same time on
+    two threads; the reference runs them one after the other, leaving
+    most cores idle while each small write's few tasks run. Each
+    thread inherits the caller's local properties (job group,
+    scheduler pool) and job tags. Both passes finish before the first
+    failure, in song-then-log order, is raised.
+
+    Rejected (perfbench's seed-1 Sparkify input, local[2] on a 4-vCPU
+    host, warm, medians of 8 interleaved rounds, 2026-10; this design
+    1.32 s a pipeline, the same passes run serially 2.13 s): the five
+    table writes as five concurrent jobs, 1.49 s; one song read shared
+    by both passes, 1.32 s, no faster for coupling the two passes.
+    """
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futures = [
+            pool.submit(
+                inheritable_thread_target(spark)(stage), spark, input_path, output_path
+            )
+            for stage in (process_song_data, process_log_data)
+        ]
+    out = {}
+    for f in futures:
+        out.update(f.result())
     return out

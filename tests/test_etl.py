@@ -148,3 +148,117 @@ def test_small_files_control_file_count(spark):
     assert roots, "sink did not write"
     files = glob.glob(f"{roots[-1]}/part-*.parquet")
     assert len(files) == 4, f"expected 4 coalesced files, found {len(files)}"
+
+
+def _tracker(sc):
+    """The status tracker once every job event posted so far has
+    reached it: the listener bus feeds its store asynchronously."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sc.statusTracker()
+
+
+def _clear_job_group(sc) -> None:
+    for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+        sc.setLocalProperty(key, None)
+
+
+def _sparkify_input(root, n_songs: int, logs: bool = True) -> str:
+    """``n_songs`` one-song files spread over song_data/X/Y/Z (X, Y, Z
+    in A-C), each with its own song and one of n_songs // 2 artists;
+    optionally the LOGS day file."""
+    inp = root / "input"
+    for i in range(n_songs):
+        d = inp / "song_data" / "ABC"[i % 3] / "ABC"[i // 3 % 3] / "ABC"[i // 9 % 3]
+        os.makedirs(d, exist_ok=True)
+        rec = dict(SONGS[0], song_id=f"S{i:03d}", artist_id=f"A{i % (n_songs // 2):03d}",
+                   title=f"T{i}")
+        (d / f"TR{i:03d}.json").write_text(json.dumps(rec))
+    if logs:
+        log_dir = inp / "log_data" / "2018" / "11"
+        os.makedirs(log_dir)
+        (log_dir / "events.json").write_text("\n".join(json.dumps(r) for r in LOGS))
+    return str(inp)
+
+
+def test_reads_list_on_the_driver(spark, tmp_path):
+    """40 song files are past Spark's 32-path parallel-discovery
+    threshold: a read of the expanded glob would launch a listing job
+    with one task per file. The directory read lists on the driver."""
+    from data_lake_with_spark_and_aws_s3_spark import etl
+
+    inp = _sparkify_input(tmp_path, 40)
+    sc = spark.sparkContext
+    sc.setJobGroup("etl-read-listing", "etl read")
+    try:
+        songs = etl._read_json(spark, f"{inp}/song_data", etl.SONG_SCHEMA)
+        log = etl._read_json(spark, f"{inp}/log_data", etl.LOG_SCHEMA)
+        assert _tracker(sc).getJobIdsForGroup("etl-read-listing") == []
+    finally:
+        _clear_job_group(sc)
+    assert songs.count() == 40 and log.count() == len(LOGS)
+
+    outp = str(tmp_path / "output")
+    run_pipeline(spark, inp, outp)
+    assert spark.read.parquet(f"{outp}/songs").count() == 40
+    assert spark.read.parquet(f"{outp}/artists").count() == 20
+
+
+def test_artists_dim_keeps_the_most_complete_row(spark, tmp_path):
+    """An artist whose song files disagree on location and coordinates
+    gets its most complete row, ties to the smallest song_id, whatever
+    order the files are listed or scanned in. Both orders (by path,
+    and Spark's largest-file-first packing) meet S3's row first."""
+    from data_lake_with_spark_and_aws_s3_spark.etl import process_song_data
+
+    inp = tmp_path / "input"
+    rows = [  # (dir, song_id, location, latitude, longitude), largest file first
+        ("A/A/A", "S3", "Memphis, Tennessee, USA", 35.14968, -90.04892),
+        ("B/B/B", "S2", "Tupelo, MS", 34.25807, -88.70464),
+        ("C/C/C", "S1", "", None, None),
+    ]
+    for d, song_id, loc, lat, lon in rows:
+        os.makedirs(inp / "song_data" / d)
+        rec = dict(SONGS[0], song_id=song_id, title=f"T{song_id}", artist_location=loc,
+                   artist_latitude=lat, artist_longitude=lon)
+        (inp / "song_data" / d / f"TR{song_id}.json").write_text(json.dumps(rec))
+
+    outp = str(tmp_path / "output")
+    tables = process_song_data(spark, str(inp), outp)
+    for artists in (tables["artists"], spark.read.parquet(f"{outp}/artists")):
+        got = [r.asDict() for r in artists.collect()]
+        assert got == [{"artist_id": "A1", "name": "Elvis", "location": "Tupelo, MS",
+                        "latitude": 34.25807, "longitude": -88.70464}]
+
+
+def test_pipeline_jobs_stay_in_the_callers_job_group(spark, tmp_path):
+    """The two passes run on pool threads; their jobs must still carry
+    the caller's job group, or tracing and cancellation lose them."""
+    inp = _sparkify_input(tmp_path, 6)
+    sc = spark.sparkContext
+    before = set(_tracker(sc).getJobIdsForGroup(None))
+    sc.setJobGroup("etl-pipeline-group", "etl pipeline")
+    try:
+        run_pipeline(spark, inp, str(tmp_path / "output"))
+    finally:
+        _clear_job_group(sc)
+    tracker = _tracker(sc)
+    assert tracker.getActiveJobsIds() == []
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+    # both passes' writes: five tables, each at least one job
+    assert len(tracker.getJobIdsForGroup("etl-pipeline-group")) >= 5
+
+
+def test_pipeline_failure_raises_after_both_passes(spark, tmp_path):
+    """A missing log_data directory fails the log pass at once; the
+    error surfaces only after the song pass has written its tables,
+    and no job is left running."""
+    from pyspark.errors import AnalysisException
+
+    inp = _sparkify_input(tmp_path, 6, logs=False)
+    outp = str(tmp_path / "output")
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        run_pipeline(spark, inp, outp)
+    assert _tracker(spark.sparkContext).getActiveJobsIds() == []
+    assert spark.read.parquet(f"{outp}/songs").count() == 6
+    assert spark.read.parquet(f"{outp}/artists").count() == 3
+    assert not os.path.exists(f"{outp}/songplays")
