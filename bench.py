@@ -3,6 +3,10 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
     {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
+`python bench.py NAME [NAME ...]` instead times the named registered
+queries in one fresh child JVM under the extended protocol and prints
+{name: median seconds}; an unregistered name fails the run.
+
 Method mirrors BASELINE.md: wall-clock to full collect(), warm-up runs
 per query (JVM/codegen warm), then median of timed runs.
 
@@ -23,7 +27,8 @@ Isolation methodology:
   (layout changes are noted here when they happen).
 
 The parent holds no SparkSession; it merges the phases and prints the
-single JSON line.
+single JSON line. `run_child` is the fresh-JVM helper the other registry
+runner (scripts/sweep.py) shares.
 """
 
 from __future__ import annotations
@@ -160,20 +165,50 @@ def _sf_from_dir(sf_dir: str) -> float:
         return -1.0
 
 
+class ChildError(RuntimeError):
+    """A child process exited non-zero or printed no JSON result."""
+
+    def __init__(self, label: str, returncode: int, why: str, stderr: str) -> None:
+        self.returncode = returncode
+        self.tail = "\n".join(stderr.strip().splitlines()[-15:])
+        super().__init__(f"{label} {why}; stderr tail:\n{self.tail}")
+
+
+def run_child(argv: list[str], label: str, env: dict | None = None) -> dict:
+    """Run `argv` to completion and return its LAST stdout line parsed as
+    JSON (Spark noise goes to stderr, but stray stdout lines are
+    tolerated). The fresh-JVM helper for every registry runner: a crashed
+    child (OOM, import error) raises with its stderr tail instead of an
+    opaque JSONDecodeError downstream."""
+    proc = subprocess.run(argv, env=env, capture_output=True, text=True)
+    if proc.returncode != 0:
+        raise ChildError(label, proc.returncode, f"exited {proc.returncode}", proc.stderr)
+    try:
+        return json.loads(proc.stdout.strip().splitlines()[-1])
+    except (IndexError, json.JSONDecodeError) as e:
+        raise ChildError(label, 0, f"printed no JSON result ({e})", proc.stderr) from e
+
+
+def _phase_queries(phase: str) -> tuple[list[str], tuple[int, int]]:
+    """`phase` is "headline", "family:<name>" or "names:<a>,<b>,..."."""
+    kind, _, arg = phase.partition(":")
+    if kind == "headline":
+        return HEADLINE, _PROTOCOL["headline"]
+    names = EXTENDED_FAMILIES[arg] if kind == "family" else arg.split(",")
+    return names, _PROTOCOL["extended"]
+
+
 def _run_phase(phase: str) -> None:
     """Child entry: time one phase's queries in this fresh JVM and print
-    a JSON timings dict as the LAST stdout line. `phase` is either
-    "headline" or "family:<name>"."""
+    a JSON {name: median seconds} dict as the LAST stdout line."""
     from data_lake_with_spark_and_aws_s3_spark import REGISTRY
     from data_lake_with_spark_and_aws_s3_spark.session import get_spark
 
+    names, (warmups, timed) = _phase_queries(phase)
+    # a renamed query must fail the run, not vanish from its output
+    if missing := [n for n in names if n not in REGISTRY]:
+        sys.exit(f"not registered: {', '.join(missing)}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if phase == "headline":
-        names, (warmups, timed) = HEADLINE, _PROTOCOL["headline"]
-    else:
-        fam = phase.split(":", 1)[1]
-        names, (warmups, timed) = EXTENDED_FAMILIES[fam], _PROTOCOL["extended"]
-    names = [n for n in names if n in REGISTRY]
     spark = get_spark(app_name=f"engine-bench-{phase.replace(':', '-')}")
     timings: dict[str, float] = {}
     for name in names:
@@ -190,47 +225,27 @@ def _run_phase(phase: str) -> None:
     spark.stop()
 
 
+def _time_in_child(phase: str) -> dict[str, float]:
+    env = dict(os.environ, SPARK_GRAFT_BENCH_PHASE=phase)
+    return run_child([sys.executable, os.path.abspath(__file__)], f"bench child {phase!r}", env)
+
+
 def main() -> None:
     if phase := os.environ.get("SPARK_GRAFT_BENCH_PHASE"):
         _run_phase(phase)
         return
+    if names := sys.argv[1:]:
+        print(json.dumps(_time_in_child("names:" + ",".join(names))))
+        return
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     timings: dict[str, float] = {}
-    phases = ["headline"] + [f"family:{f}" for f in EXTENDED_FAMILIES]
-    for phase in phases:
-        env = dict(os.environ, SPARK_GRAFT_BENCH_PHASE=phase)
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__)],
-            env=env,
-            capture_output=True,
-            text=True,
-        )
-        # Surface a crashed family JVM (OOM, import error) with its
-        # stderr tail instead of an opaque JSONDecodeError downstream —
-        # with one child process per family this is the likeliest
-        # failure mode of the whole bench.
-        if proc.returncode != 0:
-            tail = "\n".join(proc.stderr.strip().splitlines()[-15:])
-            raise RuntimeError(
-                f"bench child {phase!r} exited {proc.returncode}; "
-                f"stderr tail:\n{tail}"
-            )
-        # Last stdout line is the timings dict (Spark noise goes to stderr,
-        # but guard against stray stdout lines anyway).
-        lines = proc.stdout.strip().splitlines()
-        try:
-            timings.update(json.loads(lines[-1]))
-        except (IndexError, json.JSONDecodeError) as e:
-            tail = "\n".join(proc.stderr.strip().splitlines()[-15:])
-            raise RuntimeError(
-                f"bench child {phase!r} produced unparseable stdout "
-                f"({e}); stderr tail:\n{tail}"
-            ) from e
+    for phase in ["headline"] + [f"family:{f}" for f in EXTENDED_FAMILIES]:
+        timings.update(_time_in_child(phase))
     # Emit in the canonical order (headline, then families) regardless
     # of merge order, so round-over-round diffs read cleanly.
-    ordered = {n: timings[n] for n in HEADLINE + EXTENDED if n in timings}
-    total = round(sum(ordered[n] for n in HEADLINE if n in ordered), 4)
+    ordered = {n: timings[n] for n in HEADLINE + EXTENDED}
+    total = round(sum(ordered[n] for n in HEADLINE), 4)
     print(
         json.dumps(
             {

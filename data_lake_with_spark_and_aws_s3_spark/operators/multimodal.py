@@ -435,8 +435,8 @@ def q_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin(): the 5-long-per-doc hash frame feeds the band explode AND
     # both verify sides — unpinned, Catalyst inlined the mapInPandas
     # subtree at every reference (8 Python eval nodes in the before-
-    # plan, plans/r08/q_image_phash_dedup_before.txt), re-running the
-    # Python hashing pass per reference. Invocation-scoped (see
+    # plan, `git show 3c849af:plans/r08/q_image_phash_dedup_before.txt`),
+    # re-running the Python hashing pass per reference. Invocation-scoped (see
     # operators/_pin.py), lineage kept.
     hashes = pin(
         d.mapInPandas(

@@ -752,7 +752,7 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the recall join). Unpinned, Catalyst inlines the full shingle
     -> hash -> band -> verify pipeline at every reference — the
     before-plan scanned documents.parquet 36 times
-    (plans/r08/q_minhash_lsh_before.txt). pin() (invocation-scoped
+    (`git show 3c849af:plans/r08/q_minhash_lsh_before.txt`). pin() (invocation-scoped
     persist, operators/_pin.py) materializes each pair list (a few
     longs per near-dup pair) once per run and keeps lineage for fault
     tolerance; the next run starts by unpersisting it, so the bench

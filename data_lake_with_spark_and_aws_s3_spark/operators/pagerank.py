@@ -286,7 +286,8 @@ def q_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r8 note (measured REJECTIONS): the 726-operator plan here (each
     # half-iteration's raw table referenced twice, subtrees doubling
-    # per level — plans/r08/q_hits_hubs_authorities_before.txt) looks
+    # per level — `git show
+    # 3c849af:plans/r08/q_hits_hubs_authorities_before.txt`) looks
     # like a bug but is the FASTEST form measured: runtime exchange
     # reuse dedupes the repeated aggregates, and the duplicated
     # subtrees schedule as parallel stages. Per-half-iteration lazy

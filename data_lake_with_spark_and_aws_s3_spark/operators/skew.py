@@ -1,5 +1,5 @@
-"""Skew mitigation + co-location primitives (SURVEY.md §4.3 posture):
-salted joins for hot keys, bucketed tables for shuffle-free joins.
+"""Skew mitigation primitives (SURVEY.md §4.3 posture): a hot-key
+detector and salted joins for hot keys.
 
 These are library operators with equivalence/plan tests rather than
 oracle queries — their OUTPUT equals a plain join's; what changes is
@@ -55,66 +55,6 @@ def key_max_share(df: DataFrame, key: str) -> float:
         .collect()[0]
     )
     return row["max_c"] / row["n"]
-
-
-def should_salt(df: DataFrame, key: str, threshold: float = 0.2) -> bool:
-    """Salt decision wired to the detector: salt when one key holds
-    more than `threshold` of the rows. At that point a plain shuffle
-    puts >= threshold of the stage's rows on ONE task, so the stage's
-    wall is bounded below by threshold * total work regardless of
-    cluster size — the definition of a skew bottleneck. 0.2 default:
-    with 32+ reducers a balanced task carries ~3% of rows, so a 20%
-    key is ~6x the balanced task time. The full audit (per-key p99,
-    skew ratio) lives in q_join_key_skew_audit; this is the one-number
-    gate a pipeline can evaluate inline. End-to-end detector ->
-    decision -> bounded-max-task test: tests/test_skew_salting_e2e.py.
-    """
-    return key_max_share(df, key) > threshold
-
-
-def salted_groupby_collect(
-    df: DataFrame, key: str, value: str, salt: int = 8
-) -> DataFrame:
-    """Two-stage salted collect_list — the aggregation whose PARTIAL
-    state is the whole problem (lists don't combine map-side the way
-    sums do: every row's value must reach a reducer). Stage 1 groups
-    by (key, salt) bounding per-task state to ~1/salt of the hot key;
-    stage 2 merges `salt` partial lists per key with flatten — the
-    second exchange moves |keys| x salt LIST rows, not raw rows.
-    Output is row-identical to groupBy(key).collect_list(value) up to
-    list order (both orders are shuffle-dependent; sort to compare).
-    pmod, not %: Spark's % keeps the dividend's sign, so xxhash64 %
-    salt would span -(salt-1)..(salt-1) — ~2x the documented cell
-    count; pmod pins the salt domain to exactly 0..salt-1.
-    """
-    stage1 = df.groupBy(
-        key, F.pmod(F.xxhash64(F.col(value)), F.lit(salt)).alias("_salt")
-    ).agg(F.collect_list(value).alias("pl"))
-    return stage1.groupBy(key).agg(
-        F.flatten(F.collect_list("pl")).alias("values")
-    )
-
-
-def write_bucketed(
-    df: DataFrame,
-    spark: SparkSession,
-    table_name: str,
-    key: str,
-    n_buckets: int,
-    path: str,
-) -> None:
-    """Persist as a bucketed external table: rows hash-distributed
-    into `n_buckets` files by `key`, bucket metadata in the catalog.
-    Two tables bucketed the same way join WITHOUT a shuffle — the
-    single biggest lever for recurring fact-to-fact joins at 100 TB
-    (pay the shuffle once at write, never at read)."""
-    (
-        df.write.bucketBy(n_buckets, key)
-        .sortBy(key)
-        .option("path", path)
-        .mode("overwrite")
-        .saveAsTable(table_name)
-    )
 
 
 from ..functions.numeric import dec, money_sum  # noqa: E402

@@ -46,20 +46,18 @@ def apply_runtime_confs(spark: SparkSession) -> None:
             # a tuning conf this build will not change at runtime — keep going
 
 
-def get_spark(
-    app_name: str = "data-lake-spark-engine",
-    cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "32"
-    # Local test scales: shuffle partitions ~ cores. On a real cluster
-    # AQE coalesces post-shuffle partitions anyway, so this is a ceiling
-    # for small data, not a limit at 100 TB.
-    shuffle = shuffle_partitions or int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
+# Local test scales: shuffle partitions ~ cores. On a real cluster AQE
+# coalesces post-shuffle partitions anyway, so this is a ceiling for
+# small data, not a limit at 100 TB.
+_SHUFFLE_PARTITIONS = 32
+
+
+def get_spark(app_name: str = "data-lake-spark-engine") -> SparkSession:
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or "32"
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
+        .config("spark.sql.shuffle.partitions", str(_SHUFFLE_PARTITIONS))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -1,16 +1,14 @@
 """Source/sink coverage beyond the shared parquet loader
-(SURVEY.md §2.1): JSON tree scan, CSV scan/sink, partitioned parquet
-sink, and the S3 posture.
+(SURVEY.md §2.1): CSV sink, partitioned parquet sink, and the S3
+posture.
 
-S3: every reader/writer here takes a path string — `s3a://bucket/...`
+S3: every writer here takes a path string — `s3a://bucket/...`
 works unchanged when hadoop-aws + credentials are present (the
 reference's `dl.cfg` -> AWS_ACCESS_KEY_ID/SECRET env pattern,
 template etl.py:~10-15). Nothing in this engine is local-path
 specific.
 
 Scale notes:
-- explicit schemas everywhere: schema inference is an extra full scan
-  (JSON) or a sampling scan (CSV) — never pay it at 100 TB.
 - partitioned parquet sinks give readers partition pruning; choose
   low-cardinality partition columns (year/month, not user_id) or the
   metadata listing dominates.
@@ -20,39 +18,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-
-def read_json_tree(
-    spark: SparkSession,
-    path_glob: str,
-    schema: T.StructType | None = None,
-    mode: str = "PERMISSIVE",
-) -> DataFrame:
-    """NDJSON tree scan (the reference's ingest shape,
-    `spark.read.json(input + 'song_data/*/*/*/*.json')` template ~33).
-    With a schema: single pass, malformed rows null out (PERMISSIVE)
-    or drop (DROPMALFORMED). Without: Spark runs an inference pass
-    first — acceptable only on small data."""
-    reader = spark.read.option("mode", mode)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path_glob)
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    header: bool = True,
-) -> DataFrame:
-    reader = spark.read.option("header", header)
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", True)  # sampling scan — small data only
-    return reader.csv(path)
+from pyspark.sql import DataFrame
 
 
 def write_csv(df: DataFrame, path: str, header: bool = True, mode: str = "overwrite") -> None:

@@ -18,8 +18,6 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -79,12 +77,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # input. 16 KB/task keeps every bench-scale fan-out at full core
 # count (identical to the round-8 behavior) while still flooring the
 # task count on genuinely tiny inputs (sf0.01 corpus: 5 tasks instead
-# of 32 — less launch overhead than work). Parameterised (env) with a
-# local default; at 100 TB fan_out never fires at all (the trigger
-# below), so this dial only shapes degenerate one-file layouts.
-_FAN_OUT_BYTES_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_FANOUT_BYTES_PER_TASK", str(16 * 1024))
-)
+# of 32 — less launch overhead than work). At 100 TB fan_out never
+# fires at all (the trigger below), so this constant only shapes
+# degenerate one-file layouts.
+_FAN_OUT_BYTES_PER_TASK = 16 * 1024
 
 
 def fan_out(df: DataFrame) -> DataFrame:

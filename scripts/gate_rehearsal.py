@@ -4,9 +4,10 @@ Replays exactly what the driver's correctness gate does each round:
 a VANILLA SparkSession (no engine confs — the loader must self-set
 nanos/UTC), the first 50 entries of __spark_entry__.queries() run in
 order against their oracle_sql() twins at sf0.01, compared with the
-driver's rules (row count + schema dtype-kind + order-insensitive
-values; tests/parity.py). Reports per-query wall so prefix-budget
-headroom is MEASURED, not extrapolated from idle-machine runs.
+tier-1 rules (tests/parity.run_parity: row count + schema dtype-kind +
+order-insensitive values, and a non-empty result). Reports per-query
+wall so prefix-budget headroom is MEASURED, not extrapolated from
+idle-machine runs.
 
 --load N forks N busy-spin processes for the duration (the
 round-4 -> round-5 lesson: driver runs measured 25-40% slower than
@@ -20,6 +21,7 @@ Prints one row per query and a summary; exit 1 on any mismatch.
 
 from __future__ import annotations
 
+import argparse
 import multiprocessing
 import os
 import sys
@@ -27,7 +29,6 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.join(REPO, "tests"))
 
 
 def _busy() -> None:
@@ -37,33 +38,24 @@ def _busy() -> None:
 
 
 def main() -> None:
-    load = 0
-    sf_dir = "/root/testdata/sf0.01"
-    top = 50
-    args = sys.argv[1:]
-    for i, a in enumerate(args):
-        if a == "--load":
-            load = int(args[i + 1])
-        elif a == "--sf":
-            sf_dir = args[i + 1]
-        elif a == "--top":
-            top = int(args[i + 1])
+    ap = argparse.ArgumentParser(description=__doc__)
+    ap.add_argument("--load", type=int, default=0)
+    ap.add_argument("--sf", default="/root/testdata/sf0.01")
+    ap.add_argument("--top", type=int, default=50)
+    args = ap.parse_args()
 
-    spinners = []
-    if load:
-        for _ in range(load):
-            p = multiprocessing.Process(target=_busy, daemon=True)
-            p.start()
-            spinners.append(p)
-        print(f"# {load} busy-spin processes running", file=sys.stderr)
+    spinners = [multiprocessing.Process(target=_busy, daemon=True) for _ in range(args.load)]
+    for p in spinners:
+        p.start()
+    if spinners:
+        print(f"# {args.load} busy-spin processes running", file=sys.stderr)
 
     try:
-        import duckdb
         from pyspark.sql import SparkSession
 
         import __spark_entry__ as entrymod
-        from data_lake_with_spark_and_aws_s3_spark.sources.loader import TABLES
-        from parity import assert_frames_match
+        from data_lake_with_spark_and_aws_s3_spark.registry import QuerySpec
+        from tests.parity import duck_views, run_parity
 
         # vanilla session, the driver's way: no engine confs
         spark = (
@@ -72,26 +64,18 @@ def main() -> None:
             .getOrCreate()
         )
         spark.sparkContext.setLogLevel("ERROR")
-
-        con = duckdb.connect()
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{sf_dir}/{t}.parquet')"
-            )
+        duck = duck_views(args.sf)
 
         qs = entrymod.queries()
         osql = entrymod.oracle_sql()
-        names = list(qs)[:top]
+        names = list(qs)[: args.top]
         t_all = time.perf_counter()
         walls: list[tuple[str, float]] = []
         failures: list[str] = []
         for name in names:
             t0 = time.perf_counter()
             try:
-                spdf = qs[name](spark, sf_dir).toPandas()
-                odf = con.execute(osql[name]).fetchdf()
-                assert_frames_match(spdf, odf, name=name)
+                run_parity(spark, duck, QuerySpec(name, qs[name], osql[name]), args.sf)
                 status = "ok"
             except Exception as exc:  # noqa: BLE001 — report, don't abort
                 status = f"FAIL {type(exc).__name__}: {str(exc)[:120]}"
@@ -103,7 +87,7 @@ def main() -> None:
         walls.sort(key=lambda kv: -kv[1])
         print(
             f"\n# total {total:.1f}s for {len(names)} queries "
-            f"(load={load}); slowest 5: "
+            f"(load={args.load}); slowest 5: "
             + ", ".join(f"{n}={w:.2f}s" for n, w in walls[:5])
         )
         if failures:

@@ -3,7 +3,6 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -11,7 +10,7 @@ if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
 from data_lake_with_spark_and_aws_s3_spark.session import get_spark  # noqa: E402
-from data_lake_with_spark_and_aws_s3_spark.sources.loader import TABLES  # noqa: E402
+from tests.parity import duck_views  # noqa: E402
 
 # The driver's correctness gate runs at sf0.01 — test there by default.
 # Override with PARITY_SF_DIR for quick local iterations (sf0.001).
@@ -28,12 +27,7 @@ def spark():
 @pytest.fixture(scope="session")
 def duck():
     """DuckDB connection with the same views the driver pre-registers."""
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = duck_views(SF_DIR)
     yield con
     con.close()
 

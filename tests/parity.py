@@ -106,7 +106,22 @@ def assert_frames_match(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name:
                 )
 
 
-def run_parity(spark, duck, spec, sf_dir: str) -> None:
+def duck_views(sf_dir: str):
+    """DuckDB connection with one view per engine table over
+    `sf_dir`'s parquet files: the views the driver pre-registers before
+    it runs oracle_sql()."""
+    import duckdb
+
+    from data_lake_with_spark_and_aws_s3_spark.sources.loader import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    return con
+
+
+def run_parity(spark, duck, spec, sf_dir: str) -> pd.DataFrame:
+    """Check `spec` against its oracle; return the Spark result."""
     sdf = spec.fn(spark, sf_dir)
     spark_pdf = sdf.toPandas()
     oracle_pdf = duck.execute(spec.oracle).fetchdf()
@@ -114,3 +129,4 @@ def run_parity(spark, duck, spec, sf_dir: str) -> None:
     # correctness scale factor to actually check anything
     assert len(spark_pdf) > 0, f"{spec.name}: empty result (vacuous parity)"
     assert_frames_match(spark_pdf, oracle_pdf, name=spec.name)
+    return spark_pdf

@@ -10,9 +10,8 @@ import os
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_lake_with_spark_and_aws_s3_spark.etl import _read_json
 from data_lake_with_spark_and_aws_s3_spark.sources.formats import (
-    read_csv,
-    read_json_tree,
     write_csv,
     write_partitioned_parquet,
 )
@@ -32,20 +31,11 @@ def test_csv_roundtrip(spark, tmp_path):
             T.StructField("n_regionkey", T.IntegerType()),
         ]
     )
-    back = read_csv(spark, path, schema=schema)
+    back = spark.read.schema(schema).option("header", True).csv(path)
     assert back.count() == 25
     assert sorted(r["n_name"] for r in back.collect()) == sorted(
         r["n_name"] for r in nation.collect()
     )
-
-
-def test_csv_infer_schema(spark, tmp_path):
-    region = load_table(spark, SF, "region")
-    path = str(tmp_path / "region_csv")
-    write_csv(region, path)
-    back = read_csv(spark, path)  # inference path (small data only)
-    assert dict(back.dtypes)["r_regionkey"] == "int"
-    assert back.count() == 5
 
 
 def test_json_scan_with_schema(spark, tmp_path):
@@ -55,7 +45,7 @@ def test_json_scan_with_schema(spark, tmp_path):
     schema = T.StructType(
         [T.StructField("id", T.LongType()), T.StructField("v", T.StringType())]
     )
-    df = read_json_tree(spark, f"{tmp_path}/tree/*/*/*.json", schema=schema)
+    df = _read_json(spark, str(tmp_path / "tree"), schema)
     rows = df.collect()
     assert len(rows) == 3  # PERMISSIVE keeps the malformed row as nulls
     assert {r["id"] for r in rows} == {1, 2, None}

@@ -1,5 +1,5 @@
 """Partition-count invariance: the determinism contract must hold not
-just across JVMs (scripts/determinism_check.py) but across CLUSTER
+just across JVMs (scripts/sweep.py --runs 2) but across CLUSTER
 SHAPES — the same query on 5 vs 32 shuffle partitions must value-hash
 identically, because a 1000-executor production run will never use the
 test harness's partition count. The repo's exactness rules (decimal /

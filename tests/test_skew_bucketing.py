@@ -6,7 +6,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from data_lake_with_spark_and_aws_s3_spark import REGISTRY
-from data_lake_with_spark_and_aws_s3_spark.operators.skew import salted_join, write_bucketed
+from data_lake_with_spark_and_aws_s3_spark.operators.layout import write_bucketed
+from data_lake_with_spark_and_aws_s3_spark.operators.skew import salted_join
 from data_lake_with_spark_and_aws_s3_spark.plans import count_exchanges, formatted_plan
 from data_lake_with_spark_and_aws_s3_spark.sources.loader import load_table
 
@@ -23,11 +24,11 @@ def test_salted_join_equivalence(spark):
     assert sorted(plain.collect()) == sorted(salted.collect())
 
 
-def test_bucketed_join_eliminates_shuffle(spark, tmp_path):
+def test_bucketed_join_eliminates_shuffle(spark):
     li = load_table(spark, SF, "lineitem").select("l_orderkey", "l_quantity")
     o = load_table(spark, SF, "orders").select("o_orderkey", "o_totalprice")
-    write_bucketed(li, spark, "li_b", "l_orderkey", 8, str(tmp_path / "li_b"))
-    write_bucketed(o, spark, "o_b", "o_orderkey", 8, str(tmp_path / "o_b"))
+    write_bucketed(li, "li_b", "l_orderkey", 8)
+    write_bucketed(o, "o_b", "o_orderkey", 8)
     lib, ob = spark.table("li_b"), spark.table("o_b")
     joined = lib.join(ob, lib.l_orderkey == ob.o_orderkey)
     # co-bucketed sort-merge join: no Exchange on either side
