@@ -16,6 +16,17 @@ registry wrapper opens that scope at a top-level query entry, after
 unpersisting the frames this context's previous top-level invocation
 pinned; nested entries join it. The frames stay cached after the
 query function returns, because ``collect()`` runs after it.
+
+``session.RUNTIME_CONFS`` sets
+``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``. Spark
+4.1 defaults it to false, which keeps a cached plan's output
+partitioning as planned, so the last stage of every pinned plan read
+its shuffle with all ``spark.sql.shuffle.partitions`` tasks, even for a
+few hundred rows. With it on, AQE coalesces that stage like any other
+(q_minhash_lsh on perfbench's seed-1 tables: 20 -> 17 jobs a call,
+same result). It can add a shuffle where a consumer relied on the
+cached frame's hash partitioning; no pinned query got slower at sf0.1
+(``tests/test_pin.py`` checks the task counts).
 """
 
 from __future__ import annotations

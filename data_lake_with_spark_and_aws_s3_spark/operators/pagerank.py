@@ -250,6 +250,26 @@ def _hits_oracle() -> str:
     """
 
 
+def _hits_normalized(raw: DataFrame) -> DataFrame:
+    """One half-iteration's (n2, raw) sums max-normalized back to
+    micro-units: score = raw * 1e6 div max(raw) over the whole frame.
+
+    The max is a keyless ``OVER ()`` window on the post-aggregation
+    frame, one row per node of the side being scored, so its
+    single-partition pass is bounded by |customer| or |supplier|, not
+    by edge or fact volume (the ``q15_top_supplier`` argument). The
+    alternative, a 1-row max aggregate broadcast back with a
+    crossJoin, references the raw frame twice, so every half-iteration
+    doubles the plan beneath it. If a side's cardinality ever rivals
+    the edge list, reduce with a partial per-partition max first."""
+    return raw.select(
+        F.col("n2").alias("node"),
+        F.expr(f"CAST((raw * {_HITS_ONE}) div max(raw) OVER () AS BIGINT)").alias(
+            "score"
+        ),
+    )
+
+
 @query(
     "q_hits_hubs_authorities",
     oracle=_hits_oracle(),
@@ -269,10 +289,20 @@ def q_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay <= 1e10 at sf0.1 and the *1e6 rescale peaks ~1e16 < 2^63.
 
     Scale: each half-iteration is one edge equi-join + one key
-    aggregate (the PageRank shape — two shuffles); the max is a 1-row
-    scalar broadcast stitch (allowlisted). Edges shuffle on the side
-    being aggregated; with the edge list hash-partitioned both ways
-    once, AQE reuses the layouts across iterations."""
+    aggregate (the PageRank shape — two shuffles) + the node-sized
+    max window of ``_hits_normalized``, so the plan grows linearly
+    with the iteration count. Edges shuffle on the side being
+    aggregated; with the edge list hash-partitioned both ways once,
+    AQE reuses the layouts across iterations.
+
+    Measured (perfbench's seed-1 tables, local[2], median of 5 warm
+    calls on a 4-vCPU host): this form 1.3 s and 11 jobs. Rejected:
+    the r8 form, a 1-row max broadcast back with a crossJoin, referenced
+    each raw frame twice, so the plan doubled per level (at sf0.01
+    4,260 plan lines and 157 exchanges against 670 and 28 here): 3.4 s,
+    32 jobs. On that form, pin() per raw frame took 2.0 s (33 jobs), a
+    lazy localCheckpoint per raw frame 1.9 s (28 jobs, 22 of them in
+    the build), and collecting each max to the driver 3.9 s (60 jobs)."""
     o = load_table(spark, sf_dir, "orders")
     l = load_table(spark, sf_dir, "lineitem")
     he = (
@@ -284,38 +314,17 @@ def q_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     hub = he.select("hub").distinct().select(
         F.col("hub").alias("node"), F.lit(_HITS_ONE).cast("long").alias("score")
     )
-    # r8 note (measured REJECTIONS): the 726-operator plan here (each
-    # half-iteration's raw table referenced twice, subtrees doubling
-    # per level — `git show
-    # 3c849af:plans/r08/q_hits_hubs_authorities_before.txt`) looks
-    # like a bug but is the FASTEST form measured: runtime exchange
-    # reuse dedupes the repeated aggregates, and the duplicated
-    # subtrees schedule as parallel stages. Per-half-iteration lazy
-    # localCheckpoints (3.4 s -> 5.7 s: serializes rounds into
-    # sequential RDD materializations) and pin()s (3.4 s -> 4.2 s:
-    # cache materialization cost) both lost at 2 iterations. At a
-    # depth where planning time dominates, checkpoint per round.
     auth = None
     for _ in range(_HITS_ITERS):
-        araw = (
+        auth = _hits_normalized(
             he.join(hub, he.hub == hub.node)
             .groupBy(F.col("auth").alias("n2"))
             .agg(F.sum("score").alias("raw"))
         )
-        amax = araw.agg(F.max("raw").alias("mx"))
-        auth = araw.crossJoin(F.broadcast(amax)).select(
-            F.col("n2").alias("node"),
-            F.expr(f"CAST((raw * {_HITS_ONE}) div mx AS BIGINT)").alias("score"),
-        )
-        hraw = (
+        hub = _hits_normalized(
             he.join(auth, he.auth == auth.node)
             .groupBy(F.col("hub").alias("n2"))
             .agg(F.sum("score").alias("raw"))
-        )
-        hmax = hraw.agg(F.max("raw").alias("mx"))
-        hub = hraw.crossJoin(F.broadcast(hmax)).select(
-            F.col("n2").alias("node"),
-            F.expr(f"CAST((raw * {_HITS_ONE}) div mx AS BIGINT)").alias("score"),
         )
     both = auth.select(F.lit("authority").alias("side"), "node", "score").unionByName(
         hub.select(F.lit("hub").alias("side"), "node", "score")

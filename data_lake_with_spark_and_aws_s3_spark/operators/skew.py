@@ -1,5 +1,5 @@
-"""Skew mitigation primitives (SURVEY.md §4.3 posture): a hot-key
-detector and salted joins for hot keys.
+"""Skew mitigation primitives (SURVEY.md §4.3 posture): salted joins
+for hot keys.
 
 These are library operators with equivalence/plan tests rather than
 oracle queries — their OUTPUT equals a plain join's; what changes is
@@ -40,21 +40,6 @@ def salted_join(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
     )
     return lsalted.join(rrepl, [key, "_salt"], "inner").drop("_salt")
-
-
-def key_max_share(df: DataFrame, key: str) -> float:
-    """Detector: the hottest key's row share (q_entropy_profile's
-    ``max_share`` column, computed for one prospective shuffle key).
-    Two hash aggregates (key frequencies -> 1-row max/sum), one O(1)
-    collect — the pre-flight cost is a single scan with map-side
-    partials, negligible next to the join/agg it protects."""
-    row = (
-        df.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("c"))
-        .agg(F.max("c").alias("max_c"), F.sum("c").alias("n"))
-        .collect()[0]
-    )
-    return row["max_c"] / row["n"]
 
 
 from ..functions.numeric import dec, money_sum  # noqa: E402

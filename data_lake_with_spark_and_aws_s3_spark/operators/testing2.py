@@ -1258,9 +1258,12 @@ def q_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_death_days",
         F.col("oe").cast("long").alias("oe_micro"),
         F.col("v").cast("long").alias("v_micro"),
-        F.expr("CAST((oe * oe) div (1000 * v) AS BIGINT)").alias(
-            "chi2_milli"
-        ),
+        # no variance (one cohort, or no death day) has no chi^2: NULL,
+        # as the oracle's integer division by zero gives
+        F.expr(
+            "CASE WHEN v = 0 THEN NULL"
+            " ELSE CAST((oe * oe) div (1000 * v) AS BIGINT) END"
+        ).alias("chi2_milli"),
     )
 
 

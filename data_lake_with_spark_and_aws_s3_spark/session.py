@@ -26,6 +26,10 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # let AQE coalesce the final shuffle of a persisted (pin()ed) plan:
+    # Spark 4.1 defaults it off, so each such stage ran one task per
+    # spark.sql.shuffle.partitions (operators/_pin.py)
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # Arrow for toPandas()/pandas_udf round-trips (vectorized transfer).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
 }

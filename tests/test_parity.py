@@ -51,6 +51,20 @@ def test_oracle_dtype_lint(duck, spec):
         )
 
 
+def test_logrank_parity_without_variance(spark):
+    """At sf0.001 the log-rank variance sum is 0: chi^2 must be NULL,
+    as DuckDB's integer division by zero gives, not a Spark error."""
+    from .conftest import SMOKE_SF_DIR
+    from .parity import duck_views
+
+    duck = duck_views(SMOKE_SF_DIR)
+    try:
+        pdf = run_parity(spark, duck, REGISTRY["q_logrank_test"], SMOKE_SF_DIR)
+    finally:
+        duck.close()
+    assert (pdf["v_micro"] == 0).all() and pdf["chi2_milli"].isna().all()
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 

@@ -202,6 +202,28 @@ def test_capstone_nested_queries_keep_component_pins(spark):
     assert _cached(out), "pins must outlive the query function's return"
 
 
+def test_pinned_plan_final_stage_coalesces(spark):
+    """AQE may coalesce the last stage of a pinned plan
+    (canChangeCachedPlanOutputPartitioning): no stage of a small
+    pinned query runs one task per shuffle partition."""
+    from .test_etl import _clear_job_group, _tracker
+
+    sc = spark.sparkContext
+    sc.setJobGroup("pinned-final-stage", "q_cached_reuse")
+    try:
+        REGISTRY["q_cached_reuse"].fn(spark, SF_DIR).collect()
+        tracker = _tracker(sc)
+        tasks = [
+            tracker.getStageInfo(s).numCompletedTasks
+            for j in tracker.getJobIdsForGroup("pinned-final-stage")
+            for s in tracker.getJobInfo(j).stageIds
+        ]
+    finally:
+        _clear_job_group(sc)
+    partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert tasks and partitions not in tasks, tasks
+
+
 def _rows_key(rows) -> str:
     return repr(sorted(map(tuple, rows)))
 

@@ -1,6 +1,6 @@
-"""End-to-end salting under a PLANTED skewed key (VERDICT r3 #6):
-detector fires -> the salted physical distribution bounds the hottest
-task, while the unsalted one provably doesn't.
+"""End-to-end salting under a PLANTED skewed key (VERDICT r3 #6): the
+salted physical distribution bounds the hottest task, while the
+unsalted one provably doesn't.
 
 Measurement choice: the asserted quantity is ROWS PER SHUFFLE
 PARTITION (via spark_partition_id after an explicit hash
@@ -16,8 +16,6 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-
-from data_lake_with_spark_and_aws_s3_spark.operators.skew import key_max_share
 
 N_HOT = 60_000       # one key holds 50% of all rows
 N_BG_KEYS = 999      # the rest spread uniformly
@@ -44,17 +42,6 @@ def skewed(spark):
     df.unpersist()
 
 
-@pytest.fixture(scope="module")
-def uniform(spark):
-    bg = spark.range(N_BG).select(
-        (F.col("id") % N_BG_KEYS).alias("user_id"),
-        F.col("id").cast("string").alias("payload"),
-    )
-    bg.persist().count()
-    yield bg
-    bg.unpersist()
-
-
 def _max_partition_rows(df, *cols) -> int:
     parts = (
         df.repartition(N_PARTS, *[F.col(c) for c in cols])
@@ -65,18 +52,9 @@ def _max_partition_rows(df, *cols) -> int:
     return max(r["count"] for r in parts)
 
 
-def test_detector_fires_on_planted_skew_and_not_on_uniform(skewed, uniform):
-    share = key_max_share(skewed, "user_id")
-    assert share == pytest.approx(0.5), share
-    assert key_max_share(uniform, "user_id") < 0.01
-
-
 def test_salted_distribution_bounds_max_task(skewed):
-    """The full loop: detector fires -> the salted exchange's hottest
-    partition carries a bounded share of rows; the unsalted exchange
-    provably concentrates the hot key."""
-    assert key_max_share(skewed, "user_id") > 0.2  # one key pins one task
-
+    """The salted exchange's hottest partition carries a bounded share
+    of rows; the unsalted exchange provably concentrates the hot key."""
     unsalted_max = _max_partition_rows(skewed, "user_id")
     # the hot key's 60k rows all hash to one partition (plus whatever
     # background keys collide into it)
