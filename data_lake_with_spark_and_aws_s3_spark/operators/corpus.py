@@ -34,8 +34,8 @@ from ._sqlutil import _hex_val_sql
 _BPE_ROUNDS = 4
 
 
-def _tok_array(col: str = "text") -> Column:
-    return F.filter(F.split(F.col(col), " "), lambda x: x != "")
+def _tok_array() -> Column:
+    return F.filter(F.split(F.col("text"), " "), lambda x: x != "")
 
 
 def _char_split(word: Column) -> Column:
@@ -108,7 +108,7 @@ def _apply_merge(sym: Column, starts: Column) -> Column:
     )
 
 
-def _bpe_cte_chain(rounds: int = _BPE_ROUNDS) -> tuple[str, str]:
+def _bpe_cte_chain() -> tuple[str, str]:
     """The merge loop as chained CTEs, one block per round: pair
     counts -> deterministic top pair (count desc, lhs, rhs) -> match
     positions -> islands-of-consecutive parity (the greedy rule) ->
@@ -128,7 +128,7 @@ def _bpe_cte_chain(rounds: int = _BPE_ROUNDS) -> tuple[str, str]:
       FROM w
     )"""
     prev = "s0"
-    for r in range(1, rounds + 1):
+    for r in range(1, _BPE_ROUNDS + 1):
         sql += f"""
     , px{r} AS (
       SELECT word, cnt, sym,

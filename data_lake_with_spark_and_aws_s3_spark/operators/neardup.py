@@ -29,8 +29,8 @@ _N_MINHASH = 16
 _N_BANDS = 4  # 4 hashes per band
 
 
-def _token_set(col="text"):
-    return F.array_distinct(F.filter(F.split(F.col(col), " "), lambda x: x != ""))
+def _token_set():
+    return F.array_distinct(F.filter(F.split(F.col("text"), " "), lambda x: x != ""))
 
 
 @query(
@@ -86,7 +86,7 @@ def q_ngram_jaccard_pairs_exact_smallcorpus(spark: SparkSession, sf_dir: str) ->
     )
 
 
-def minhash_signatures(docs: DataFrame, n_hashes: int = _N_MINHASH) -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """MinHash signature per doc: h_i(doc) = min over shingle hashes of
     xxhash64(base_hash(shingle), seed=i). Pure HOF pipeline —
     signatures compute per-row in codegen, no shuffle. Returns
@@ -105,7 +105,7 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = _N_MINHASH) -> DataFrame
     sig = F.array(
         *[
             F.array_min(F.transform("th", lambda h, i=i: F.xxhash64(h, F.lit(i))))
-            for i in range(n_hashes)
+            for i in range(_N_MINHASH)
         ]
     )
     return base.select("doc_id", sig.alias("sig"))
@@ -521,12 +521,12 @@ _ML_SEEDS = 16
 _ML_BANDS = 4  # 4 seeds per band
 
 
-def _hex_window_sql(h: str, start: int, n: int = 4) -> str:
-    """Integer value of hex digits [start, start+n) (1-based) of `h` —
+def _hex_window_sql(h: str, start: int) -> str:
+    """Integer value of hex digits [start, start+4) (1-based) of `h` —
     digit-parse form valid in BOTH dialects (Spark additionally uses
     conv(), which DuckDB lacks; values are identical)."""
     expr = "CAST(0 AS BIGINT)"
-    for i in range(n):
+    for i in range(4):
         expr = f"(({expr}) * 16 + instr('0123456789abcdef', substr({h}, {start + i}, 1)) - 1)"
     return expr
 

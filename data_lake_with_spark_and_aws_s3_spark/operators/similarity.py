@@ -897,15 +897,15 @@ def srp_signatures(
     )
 
 
-def srp_bands(sig_df, id_col: str = "vec_id"):
-    """(id, k, bv) band rows from a (id, sg) signature frame — the
-    O(n*bands) explode that feeds the LSH bucket equi-join."""
+def srp_bands(sig_df):
+    """(vec_id, k, bv) band rows from a (vec_id, sg) signature frame —
+    the O(n*bands) explode that feeds the LSH bucket equi-join."""
     return sig_df.select(
-        id_col,
+        "vec_id",
         F.explode(F.sequence(F.lit(0), F.lit(_SRP_NBANDS - 1))).alias("k"),
         "sg",
     ).select(
-        id_col,
+        "vec_id",
         "k",
         (
             F.expr(f"sg div shiftleft(cast(1 as bigint), cast({_SRP_BITS} * k as int))")

@@ -13,31 +13,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    how: str = "inner",
-    salt: int = 16,
-) -> DataFrame:
-    """Equi-join with the LEFT side's hot keys spread over `salt`
-    sub-partitions and the RIGHT side replicated `salt` times.
+_SALT = 16
+
+
+def salted_join(left: DataFrame, right: DataFrame, key: str) -> DataFrame:
+    """Inner equi-join with the LEFT side's hot keys spread over
+    `_SALT` sub-partitions and the RIGHT side replicated `_SALT` times.
 
     Use when one key dominates the left side (e.g. a null-ish default
     id holding 10% of a 100 TB fact): a plain shuffle join puts that
-    whole key on one task; salting divides it by `salt` at the cost
+    whole key on one task; salting divides it by `_SALT` at the cost
     of replicating the right side's rows for that key.
 
     AQE's skew-join handles sort-merge skew automatically for many
     cases — reach for explicit salting when AQE can't (aggregations
     after the join keyed on the same column, or stubborn plans).
-    Result is row-identical to left.join(right, key, how).
+    Result is row-identical to left.join(right, key).
     """
-    if how != "inner":
-        raise ValueError("salted_join demonstrates the inner-join shape")
-    lsalted = left.withColumn("_salt", (F.rand(seed=42) * salt).cast("int"))
+    lsalted = left.withColumn("_salt", (F.rand(seed=42) * _SALT).cast("int"))
     rrepl = right.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(_SALT - 1)))
     )
     return lsalted.join(rrepl, [key, "_salt"], "inner").drop("_salt")
 
@@ -74,7 +69,7 @@ def q_salted_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle surface. This corpus's l_orderkey is uniform — the query
     demonstrates the mechanism, not a measured win; the measured-skew
     counterpart is the AQE forceOptimizeSkewedJoin test. Cost model at
-    100 TB: salting multiplies the small side's shuffle by `salt`
+    100 TB: salting multiplies the small side's shuffle by `_SALT`
     (16x here) to divide the hot key's task time by the same factor —
     apply per hot key (filtered split) in production, not blanket."""
     li = load_table(spark, sf_dir, "lineitem").select(

@@ -27,9 +27,9 @@ _STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on")
 _SW_SQL = ", ".join(f"'{w}'" for w in _STOPWORDS)
 
 
-def tokens(col="text"):
-    """Whitespace tokens with empties removed (multi-space safe)."""
-    return F.filter(F.split(F.col(col), " "), lambda x: x != "")
+def tokens():
+    """Whitespace tokens of ``text`` with empties removed (multi-space safe)."""
+    return F.filter(F.split(F.col("text"), " "), lambda x: x != "")
 
 
 @query(

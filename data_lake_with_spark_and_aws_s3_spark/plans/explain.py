@@ -93,11 +93,11 @@ def count_keyless_windows(df: DataFrame) -> int:
 
     Detection: in `explain("formatted")` detail sections, a Window
     node's Arguments line is `[exprs], [partitionSpec], [orderSpec]`
-    when fully keyed but drops the empty list: keyless-with-order is
-    `[exprs], [orderSpec]` and keyed-without-order is `[exprs],
-    [partitionSpec]`. Two top-level groups whose SECOND contains a
-    sort direction (ASC/DESC) = keyless — verified against Spark 4.x
-    output."""
+    when fully keyed but drops each empty list: keyless-with-order is
+    `[exprs], [orderSpec]`, keyed-without-order is `[exprs],
+    [partitionSpec]` and `OVER ()` (neither) is `[exprs]`. One
+    top-level group, or two whose SECOND contains a sort direction
+    (ASC/DESC), = keyless — verified against Spark 4.1 output."""
     return count_keyless_windows_in(formatted_plan(df))
 
 
@@ -129,8 +129,8 @@ def count_keyless_windows_in(plan_text: str) -> int:
                         continue
                 if depth >= 1:
                     buf.append(ch)
-            if len(groups) == 2 and (
-                " ASC" in groups[1] or " DESC" in groups[1]
+            if len(groups) == 1 or (
+                len(groups) == 2 and (" ASC" in groups[1] or " DESC" in groups[1])
             ):
                 n += 1
             break

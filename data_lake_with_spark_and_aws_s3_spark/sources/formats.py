@@ -21,15 +21,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def write_csv(df: DataFrame, path: str, header: bool = True, mode: str = "overwrite") -> None:
-    df.write.option("header", header).mode(mode).csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    df.write.option("header", True).mode("overwrite").csv(path)
 
 
-def write_partitioned_parquet(
-    df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
-) -> None:
+def write_partitioned_parquet(df: DataFrame, path: str, partition_cols: list[str]) -> None:
     """Dynamic-partition parquet sink (template ~41, ~150). Each task
     writes one file per partition value it holds — repartition by the
     partition columns first if many tasks hold many values (small-file
     problem at scale)."""
-    df.repartition(*partition_cols).write.partitionBy(*partition_cols).mode(mode).parquet(path)
+    df.repartition(*partition_cols).write.partitionBy(*partition_cols).mode("overwrite").parquet(path)

@@ -10,23 +10,36 @@ Scale notes (100 TB posture):
 - Parquet scan goes through the DataSource V2 vectorized reader;
   filters/projections in downstream operators push into the scan
   (check with .explain: PushedFilters / ReadSchema).
-- The events nanos fix is a column rewrite AFTER the scan — it does not
-  break pushdown on other columns and keeps partition pruning intact.
+- Timestamps are typed by the read schema, not by casts after the
+  scan, so pushdown and partition pruning see the columns as stored.
 - No .cache() here: at 100 TB you want the scan re-planned per query
   with that query's pruning, not a materialized generic copy.
 
-Schema memo: ``spark.read.parquet`` without a schema infers it from
-the footers, one Spark job and ~100 ms a call on a small table;
-handed a schema, the same read takes ~10 ms and launches no job.
-``load_table`` therefore remembers the inferred ``StructType`` under
-(path, file identity, the confs that change parquet inference), where
-the file identity is the name, size and mtime of the file or of every
-file under the directory, listed through the Hadoop ``FileSystem`` so
-``s3a://`` paths work the same. A rewritten table or a flipped
-``nanosAsLong`` is a new key and is inferred again. The memo holds
-schemas only, never data, so every call still scans its parquet. An
-entry is never replaced; threads that miss at once infer equal values
-and read with the first one stored.
+Read schemas: every table read, batch (``load_table``) or streaming
+(``streaming/twins.py``), takes its schema from ``read_schema``, the
+only place that infers one. ``spark.read.parquet`` without a schema
+infers it from the footers, one Spark job and ~100 ms a call on a
+small table; handed a schema, the same read takes ~10 ms and launches
+no job, and ``readStream`` cannot read parquet without one. The memo
+holds the READ schema under (path, file identity, the confs that
+change parquet inference), where the file identity is the name, size
+and mtime of the file or of every file under the directory, listed
+through the Hadoop ``FileSystem`` so ``s3a://`` paths work the same.
+A rewritten table or a flipped ``nanosAsLong`` is a new key and is
+inferred again. The memo holds schemas only, never data, so every
+call still scans its parquet. An entry is never replaced; threads
+that miss at once infer equal values and read with the first one
+stored.
+
+The read schema differs from the inferred one in one way: a
+TIMESTAMP(MICROS, isAdjustedToUTC=false) column, which Spark 4 infers
+as TIMESTAMP_NTZ (rejected by time functions like unix_micros), reads
+as TIMESTAMP. Under the required UTC session zone the wall clock is
+the same UTC instant, matching DuckDB's naive-timestamp read of the
+identical column bit-for-bit, and no cast lands in the plan. An INT64
+TIMESTAMP(NANOS) column cannot be typed that way: Spark 4.1.2 refuses
+to read it as TIMESTAMP with either parquet reader, so it reads as
+long nanos (``nanosAsLong``) and ``normalize_timestamps`` rewrites it.
 """
 
 from __future__ import annotations
@@ -35,7 +48,7 @@ from py4j.java_gateway import JavaClass
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType, TimestampNTZType, TimestampType
 
 from ..session import apply_runtime_confs
 
@@ -52,28 +65,19 @@ TABLES = (
     "embeddings",
 )
 
+# the one column the generator has shipped as INT64 TIMESTAMP(NANOS)
+_NANOS_COL = "ts"
 
-def normalize_timestamps(df: DataFrame, nanos_cols: tuple[str, ...] = ("ts",)) -> DataFrame:
-    """Normalize timestamp columns to session-UTC TIMESTAMP regardless
-    of how the driver generated the parquet (the generator has shipped
-    both encodings across rounds):
 
-    - INT64 TIMESTAMP(NANOS): with spark.sql.legacy.parquet.nanosAsLong
-      =true it reads as long nanos -> exact integer division to µs
-      (`div`, not `/` — float division loses sub-µs precision at 1e18
-      ns), then timestamp_micros. Only applied to known-nanos columns
-      (`nanos_cols`) so genuine bigint columns are untouched.
-    - TIMESTAMP(MICROS, isAdjustedToUTC=false): Spark 4 infers
-      TIMESTAMP_NTZ, which time functions like unix_micros reject ->
-      cast to TIMESTAMP. With spark.sql.session.timeZone=UTC the wall
-      clock is reinterpreted as the same UTC instant, matching DuckDB's
-      naive-timestamp read of the identical column bit-for-bit.
-    """
-    for col, dt in df.dtypes:
-        if dt == "bigint" and col in nanos_cols:
-            df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
-        elif dt == "timestamp_ntz":
-            df = df.withColumn(col, F.col(col).cast("timestamp"))
+def normalize_timestamps(df: DataFrame) -> DataFrame:
+    """Turn a long-nanos ``ts`` (INT64 TIMESTAMP(NANOS) read under
+    spark.sql.legacy.parquet.nanosAsLong=true) into a session-UTC
+    TIMESTAMP: exact integer division to µs (`div`, not `/` — float
+    division loses sub-µs precision at 1e18 ns), then timestamp_micros.
+    Only ``ts`` is known to be nanos, so genuine bigint columns are
+    untouched."""
+    if dict(df.dtypes).get(_NANOS_COL) == "bigint":
+        df = df.withColumn(_NANOS_COL, F.timestamp_micros(F.expr(f"{_NANOS_COL} div 1000")))
     return df
 
 
@@ -89,11 +93,11 @@ _SCHEMA_CONFS = (
     "spark.sql.sources.partitionColumnTypeInference.enabled",
 )
 
-# (path, file identity, _SCHEMA_CONFS values) -> inferred schema
+# (path, file identity, _SCHEMA_CONFS values) -> read schema
 _SCHEMAS: dict[tuple, StructType] = {}
 
 
-def _file_identity(spark: SparkSession, path: str) -> tuple:
+def file_identity(spark: SparkSession, path: str) -> tuple:
     """(name, size, mtime) of the file at ``path`` or of every file
     under it. Raises Py4JJavaError if the path does not exist."""
     # a JavaClass by name costs no reflection round trip per package level
@@ -109,18 +113,34 @@ def _file_identity(spark: SparkSession, path: str) -> tuple:
     return tuple(sorted(out))
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    apply_runtime_confs(spark)  # driver's session may lack the nanos flag
-    path = f"{sf_dir}/{name}.parquet"
+def _infer(spark: SparkSession, path: str) -> StructType:
+    """The inferred schema with each TIMESTAMP_NTZ field read as TIMESTAMP."""
+    return StructType([
+        StructField(f.name, TimestampType(), f.nullable, f.metadata)
+        if isinstance(f.dataType, TimestampNTZType) else f
+        for f in spark.read.parquet(path).schema.fields
+    ])
+
+
+def read_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema every read of the parquet at ``path`` uses (module
+    docstring). Applies the runtime confs first: the driver's session
+    may lack the nanos flag."""
+    apply_runtime_confs(spark)
     try:
-        identity = _file_identity(spark, path)
-    except Py4JJavaError:  # let the read raise its own PATH_NOT_FOUND
-        return normalize_timestamps(spark.read.parquet(path))
+        identity = file_identity(spark, path)
+    except Py4JJavaError:  # unlisted: infer uncached; a missing path raises PATH_NOT_FOUND
+        return _infer(spark, path)
     key = (path, identity, tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
     schema = _SCHEMAS.get(key)
     if schema is None:
-        schema = _SCHEMAS.setdefault(key, spark.read.parquet(path).schema)
-    return normalize_timestamps(spark.read.schema(schema).parquet(path))
+        schema = _SCHEMAS.setdefault(key, _infer(spark, path))
+    return schema
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    path = f"{sf_dir}/{name}.parquet"
+    return normalize_timestamps(spark.read.schema(read_schema(spark, path)).parquet(path))
 
 
 # Compressed input bytes one fan-out task should carry. The fanned

@@ -14,100 +14,70 @@ State & scale: watermarks bound state for window aggs and dedup;
 session windows + dropDuplicatesWithinWatermark require the watermark
 or state grows without bound. Shuffle partitions size the state store
 (one store per partition per stateful operator).
+
+Sources: readStream requires an explicit schema. Every stream here
+takes the one the batch loader reads the same table with
+(sources/loader.read_schema, memoized per file identity and inference
+confs, so a rewritten table streams with its new schema) and the same
+nanos normalization, so a stream and its batch twin see one typing.
 """
 
 from __future__ import annotations
+
+import atexit
+import datetime
+import glob
+import os
+import shutil
+import tempfile
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# events.parquet on-disk schema, discovered per source file: the
-# driver generator has shipped ts as INT64 nanos (reads as bigint
-# under nanosAsLong) and as TIMESTAMP(MICROS, ntz) across rounds, and
-# readStream requires an explicit schema — so take it from a one-off
-# batch read of the same file and reuse the loader's normalization.
-_RAW_SCHEMA: dict[str, T.StructType] = {}
+from ..sources.loader import file_identity, normalize_timestamps, read_schema
+
+# staged source dirs, one per (source file, tag) per process, removed at exit
+_STAGED: dict[tuple, str] = {}
 
 
-def _events_raw_schema(spark: SparkSession, src: str) -> T.StructType:
-    if src not in _RAW_SCHEMA:
-        _RAW_SCHEMA[src] = spark.read.parquet(src).schema
-    return _RAW_SCHEMA[src]
-
-
-# staged symlink dirs, one per source file per process, removed at exit
-_STAGED: dict[str, str] = {}
-
-
-def _staged_dir(src: str, name: str = "events.parquet") -> str:
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    if src not in _STAGED:
+def _staged_dir(src: str, tag: object = None) -> str:
+    """A temp directory holding a symlink to ``src`` under its own name:
+    the file streaming source reads a DIRECTORY (it monitors it for new
+    files) and the testdata tables are single files. A production
+    stream points at a landing dir or kafka instead."""
+    if (src, tag) not in _STAGED:
         staged = tempfile.mkdtemp(prefix="stream_table_")
         atexit.register(shutil.rmtree, staged, True)
-        os.symlink(src, os.path.join(staged, name))
-        _STAGED[src] = staged
-    return _STAGED[src]
+        os.symlink(src, os.path.join(staged, os.path.basename(src)))
+        _STAGED[src, tag] = staged
+    return _STAGED[src, tag]
+
+
+def _stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    src = f"{sf_dir}/{name}.parquet"
+    staged = _staged_dir(src) if os.path.isfile(src) else src
+    return normalize_timestamps(spark.readStream.schema(read_schema(spark, src)).parquet(staged))
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events parquet with the same
-    nanos->timestamp conversion as the batch loader.
-
-    The file-based streaming source requires a DIRECTORY (it monitors
-    for new files); the testdata table is a single file, so stage a
-    symlink directory (cached per process, cleaned at exit). A
-    production stream points at a landing dir or kafka instead."""
-    import os
-
-    from ..session import apply_runtime_confs
-
-    from ..sources.loader import normalize_timestamps
-
-    apply_runtime_confs(spark)
-    src = f"{sf_dir}/events.parquet"
-    schema = _events_raw_schema(spark, src)
-    if os.path.isfile(src):
-        src = _staged_dir(src)
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("path", src)
-        .load()
-    )
-    return normalize_timestamps(raw)
+    """readStream over the events parquet, typed exactly as the batch
+    loader reads it."""
+    return _stream(spark, sf_dir, "events")
 
 
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the documents parquet — the ingestion-time text
-    stream (no timestamp columns, so no nanos normalization needed).
-    Same staged-symlink-directory mechanics as stream_events."""
-    import os
-
-    from ..session import apply_runtime_confs
-
-    apply_runtime_confs(spark)
-    src = f"{sf_dir}/documents.parquet"
-    schema = _events_raw_schema(spark, src)
-    if os.path.isfile(src):
-        src = _staged_dir(src, "documents.parquet")
-    return (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("path", src)
-        .load()
-    )
+    stream."""
+    return _stream(spark, sf_dir, "documents")
 
 
-def streaming_tumbling(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+def streaming_tumbling(events: DataFrame) -> DataFrame:
     """Hourly tumbling counts with late-data handling — the streaming
     twin of q_events_tumbling."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
         .select(
@@ -116,11 +86,11 @@ def streaming_tumbling(events: DataFrame, watermark: str = "10 minutes") -> Data
     )
 
 
-def streaming_session_window(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def streaming_session_window(events: DataFrame) -> DataFrame:
     """Session windows with watermark — twin of q_session_window."""
     return (
         events.withWatermark("ts", "10 minutes")
-        .groupBy(F.session_window("ts", gap), "user_id")
+        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",
@@ -131,11 +101,11 @@ def streaming_session_window(events: DataFrame, gap: str = "30 minutes") -> Data
     )
 
 
-def streaming_dedup(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+def streaming_dedup(events: DataFrame) -> DataFrame:
     """Exactly-once-ification of at-least-once delivery — twin of
     q_stream_dedup. dropDuplicatesWithinWatermark keeps the dedup
     state bounded by the watermark horizon."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
+    return events.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(["event_id"])
 
 
 def run_to_memory(df: DataFrame, name: str, output_mode: str = "append"):
@@ -213,8 +183,6 @@ def run_foreach_batch_upsert(agg: DataFrame, target_dir: str, key: str) -> None:
 
     def upsert(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        import os
-
         if os.path.exists(target_dir) and any(
             f.endswith(".parquet") for f in os.listdir(target_dir)
         ):
@@ -225,8 +193,6 @@ def run_foreach_batch_upsert(agg: DataFrame, target_dir: str, key: str) -> None:
         # write-then-swap would make this atomic on a real object store;
         # local test writes a fresh snapshot (collect to driver-free path)
         merged.write.mode("overwrite").parquet(target_dir + "_next")
-        import shutil
-
         if os.path.exists(target_dir):
             shutil.rmtree(target_dir)
         shutil.move(target_dir + "_next", target_dir)
@@ -240,7 +206,7 @@ def run_foreach_batch_upsert(agg: DataFrame, target_dir: str, key: str) -> None:
     )
 
 
-_SENTINEL_STAGED: dict[str, str] = {}
+_EPOCH = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
 
 
 def stream_events_with_wm_sentinel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -258,25 +224,20 @@ def stream_events_with_wm_sentinel(spark: SparkSession, sf_dir: str) -> DataFram
     and availableNow's closing no-data micro-batch evicts the
     remaining state. Consumers filter user_id == -1 back out. This is
     the bounded-replay analog of the heartbeat/punctuation events a
-    production pipeline feeds kafka for exactly this reason."""
-    import datetime
-    import os
+    production pipeline feeds kafka for exactly this reason.
 
-    from ..session import apply_runtime_confs
-    from ..sources.loader import normalize_timestamps
-
-    apply_runtime_confs(spark)
+    The sentinels are written with the schema the stream reads with,
+    in a staged dir keyed by that schema and the table's files, so a
+    rewritten table or a flipped nanosAsLong gets fresh ones."""
     src = f"{sf_dir}/events.parquet"
-    if src not in _SENTINEL_STAGED:
-        import atexit
-        import shutil
-        import tempfile
-
-        staged = tempfile.mkdtemp(prefix="stream_events_wm_")
-        atexit.register(shutil.rmtree, staged, True)
-        os.symlink(src, os.path.join(staged, "events.parquet"))
-        raw_schema = spark.read.parquet(src).schema
-        max_ts = spark.read.parquet(src).agg(F.max("ts")).collect()[0][0]
+    schema = read_schema(spark, src)
+    staged = _staged_dir(src, (schema, file_identity(spark, src)))
+    if not os.path.exists(os.path.join(staged, "zz_wm_sentinel_3.parquet")):
+        max_us = (
+            normalize_timestamps(spark.read.schema(schema).parquet(src))
+            .agg(F.unix_micros(F.max("ts")))
+            .first()[0]
+        )
         # THREE staggered sentinel batches, not one: state eviction in
         # batch N uses the watermark computed at the END of batch N-1,
         # and availableNow terminates without a closing no-data batch —
@@ -289,22 +250,22 @@ def stream_events_with_wm_sentinel(spark: SparkSession, sf_dir: str) -> DataFram
         # window-agg consumer's last hour bucket closes at
         # trunc(max)+1h, which #1's max+50min misses whenever max sits
         # in the first 10 minutes of its hour).
-        import glob
-        import time
-
+        #
         # Sentinels must be PLAIN FILES beside the data symlink (a
         # write.parquet() output DIRECTORY is invisible to the file
         # stream source), with mtimes just after the data file's (an
         # exotic far-future mtime would age the real data file out via
         # the source's maxFileAge window).
+        long_nanos = isinstance(schema["ts"].dataType, T.LongType)
         for k in (1, 2, 3):
-            sent_ts = max_ts + datetime.timedelta(hours=k)
+            us = max_us + k * 3_600_000_000
+            sent_ts = us * 1000 if long_nanos else _EPOCH + datetime.timedelta(microseconds=us)
             sent = spark.createDataFrame(
                 [
                     (-(2 * k - 1), sent_ts, -1, "purchase", 0.0, "{}"),
                     (-(2 * k), sent_ts, -1, "click", 0.0, "{}"),
                 ],
-                schema=raw_schema,
+                schema=schema,
             )
             tmp_out = os.path.join(staged, f"_build_sentinel_{k}")
             sent.coalesce(1).write.parquet(tmp_out)
@@ -314,14 +275,11 @@ def stream_events_with_wm_sentinel(spark: SparkSession, sf_dir: str) -> DataFram
             shutil.rmtree(tmp_out, ignore_errors=True)
             newer = time.time() + 10 * k
             os.utime(dest, (newer, newer))
-        _SENTINEL_STAGED[src] = staged
     raw = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .format("parquet")
-        .option("path", _SENTINEL_STAGED[src])
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .option("recursiveFileLookup", "true")
-        .load()
+        .parquet(staged)
     )
     return normalize_timestamps(raw)
 

@@ -4,13 +4,15 @@ The driver regenerates /root/testdata between rounds; between rounds 1 and 2
 it kept values identical but changed parquet timestamp encodings
 (INT64 TIMESTAMP(NANOS) -> TIMESTAMP(MICROS, isAdjustedToUTC=false)), which
 silently changes what a vanilla Spark 4 session reads (TIMESTAMP_NTZ) and
-broke every events query until sources/loader.normalize_timestamps absorbed
-it. This test reads every table's parquet FOOTER via pyarrow (no Spark
-session, sub-second) and diffs against the pinned schema below. If it fails:
+broke every events query until the loader absorbed it. This test reads every
+table's parquet FOOTER via pyarrow (no Spark session, sub-second) and diffs
+against the pinned schema below. If it fails:
 
   1. Read the listed drifted columns.
-  2. Extend sources/loader.normalize_timestamps to absorb the new encoding
-     (both the bigint-nanos and ntz->UTC paths live there).
+  2. Absorb the new encoding in the loader's read schema
+     (sources/loader.read_schema, which reads NTZ as TIMESTAMP); only an
+     encoding Spark cannot read as the wanted type gets a column rewrite
+     in normalize_timestamps (the long-nanos `ts`).
   3. Re-pin EXPECTED below once the loader handles it and parity is green.
 """
 
@@ -136,8 +138,9 @@ def test_parquet_footers_match_pinned_schema(sf):
     assert not missing, f"{sf}: tables vanished from testdata: {sorted(missing)}"
     assert not drifted, (
         "TESTDATA DRIFT — the driver regenerated parquet with different "
-        "encodings. Extend sources/loader.normalize_timestamps (see module "
-        "docstring), then re-pin. Drifted:\n  " + "\n  ".join(drifted)
+        "encodings. Absorb them in the loader's read schema "
+        "(sources/loader.read_schema; see this module's docstring), then "
+        "re-pin. Drifted:\n  " + "\n  ".join(drifted)
     )
 
 

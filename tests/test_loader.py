@@ -1,10 +1,13 @@
-"""The schema memo of ``sources.loader.load_table``: a memo hit must
-read with the schema the same read would infer, launch no job, and miss
-whenever the files or the inference confs change."""
+"""The read-schema memo of ``sources.loader``: a memo hit must read with
+the schema the same read would infer (TIMESTAMP_NTZ read as TIMESTAMP),
+launch no job, and miss whenever the files or the inference confs change;
+no other module infers a parquet schema."""
 
 from __future__ import annotations
 
 import os
+import pathlib
+import re
 import sys
 import threading
 
@@ -12,8 +15,11 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from data_lake_with_spark_and_aws_s3_spark import session
+from data_lake_with_spark_and_aws_s3_spark.plans import formatted_plan
 from data_lake_with_spark_and_aws_s3_spark.sources import loader
 
 from .conftest import SMOKE_SF_DIR
@@ -78,8 +84,33 @@ def test_memo_hit_launches_no_job(spark):
     finally:
         _clear_job_group(sc)
     assert again.schema == first.schema
-    raw = spark.read.parquet(f"{SMOKE_SF_DIR}/lineitem.parquet")
-    assert loader.normalize_timestamps(raw).schema == again.schema
+    assert again.dtypes == [
+        ("l_orderkey", "bigint"),
+        ("l_partkey", "bigint"),
+        ("l_suppkey", "bigint"),
+        ("l_linenumber", "int"),
+        ("l_quantity", "double"),
+        ("l_extendedprice", "double"),
+        ("l_discount", "double"),
+        ("l_tax", "double"),
+        ("l_returnflag", "string"),
+        ("l_linestatus", "string"),
+        ("l_shipdate", "timestamp"),
+    ]
+
+
+def test_ntz_columns_read_as_timestamp_without_a_cast(spark):
+    """The NTZ shipdate is typed by the read schema: no cast lands in
+    the plan, and a date filter still reaches the parquet scan."""
+    li = loader.load_table(spark, SMOKE_SF_DIR, "lineitem")
+    plan = formatted_plan(
+        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
+    )
+    assert "cast(" not in plan.lower(), plan
+    assert any(
+        "PushedFilters" in line and "LessThanOrEqual(l_shipdate" in line
+        for line in plan.splitlines()
+    ), plan
 
 
 def test_concurrent_loads_get_equal_schemas(spark, tmp_path):
@@ -91,9 +122,12 @@ def test_concurrent_loads_get_equal_schemas(spark, tmp_path):
         "d": pa.array([1.5, 2.5, 3.5]),
         "t": pa.array([0, 1, 2], pa.timestamp("us")),
     }))
-    expected = loader.normalize_timestamps(
-        spark.read.parquet(str(tmp_path / "wide.parquet"))
-    ).schema
+    expected = T.StructType([
+        T.StructField("k", T.LongType()),
+        T.StructField("s", T.StringType()),
+        T.StructField("d", T.DoubleType()),
+        T.StructField("t", T.TimestampType()),
+    ])
     barrier = threading.Barrier(8, timeout=60)
     schemas, errors = [], []
 
@@ -130,3 +164,27 @@ def test_concurrent_loads_get_equal_schemas(spark, tmp_path):
 def test_missing_table_raises_path_not_found(spark, tmp_path):
     with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
         loader.load_table(spark, str(tmp_path), "orders")
+
+
+# a schema taken off an inferred read, or a read of an engine table path
+_INFERS_SCHEMA = re.compile(
+    r"\.read\s*\.parquet\((?:[^()]|\([^()]*\))*\)\s*\.schema\b"
+    r"|\.read\s*\.parquet\(\s*f?[\"']\{sf_dir\}"
+)
+
+
+def test_only_the_loader_infers_parquet_schemas():
+    """Every table read, batch or streaming, takes its schema from
+    ``loader.read_schema``; a second inference elsewhere would keep its
+    own (stale-prone) typing of the same files."""
+    loader_py = pathlib.Path(loader.__file__).resolve()
+    pkg = loader_py.parents[1]
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        text = path.read_text()
+        if path != loader_py:
+            offenders += [
+                f"{path.relative_to(pkg)}:{text.count(chr(10), 0, m.start()) + 1}"
+                for m in _INFERS_SCHEMA.finditer(text)
+            ]
+    assert not offenders, offenders

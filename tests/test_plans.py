@@ -76,6 +76,23 @@ def test_hits_plan_grows_linearly(spark):
     assert "BroadcastNestedLoopJoin" not in formatted_plan(df)
 
 
+def test_keyless_lint_counts_over_empty_windows(spark):
+    """A window with neither PARTITION BY nor ORDER BY (`OVER ()`)
+    collapses to one task like an ordered keyless one; the lint counts
+    both forms and neither keyed form. HITS normalizes each of its four
+    half-iterations with one."""
+    from data_lake_with_spark_and_aws_s3_spark.plans import count_keyless_windows
+
+    df = spark.range(10).selectExpr("id", "id % 3 AS g")
+    assert count_keyless_windows(df.selectExpr("id", "max(id) OVER () AS m")) == 1
+    assert count_keyless_windows(df.selectExpr("row_number() OVER (ORDER BY id) AS r")) == 1
+    assert count_keyless_windows(df.selectExpr("max(id) OVER (PARTITION BY g) AS m")) == 0
+    assert count_keyless_windows(
+        df.selectExpr("sum(id) OVER (PARTITION BY g ORDER BY id) AS m")
+    ) == 0
+    assert count_keyless_windows(REGISTRY["q_hits_hubs_authorities"].fn(spark, SF)) >= 4
+
+
 def test_curation_single_fingerprint_scan(spark):
     """Canonical-doc selection must not recompute the md5-shingle scan:
     one documents scan, one fingerprint-keyed exchange — plus, since
@@ -530,6 +547,32 @@ _KEYLESS_WINDOW_ALLOWED = {
         "supplier-dim post-aggregation frame; docstring documents the "
         "measured double-scan cost of the max+join alternative"
     ),
+    "q_hits_hubs_authorities": (
+        "max(raw) OVER () per half-iteration over the node-sized frame: "
+        "|customer| or |supplier| rows, so it grows with SF (the "
+        "q15_top_supplier tradeoff; pagerank._hits_normalized docstring)"
+    ),
+    # --- OVER () totals over category- or value-domain frames ---
+    "q_histogram": "share total over 20 price buckets ([0, 500k) / 25k width)",
+    "q_hierarchical_share": "world total over the 25-row (region, nation) frame",
+    "q_naive_bayes_langid": "prior total over the 5-row per-language frame",
+    "q_precision_recall_f1": (
+        "q_naive_bayes_langid's 5-row prior total, twice: the confusion "
+        "matrix feeds both the tp/fp and the fn branch"
+    ),
+    "q_class_reweight": "N and K totals over the 5-row per-language counts",
+    "q_mutual_information": (
+        "N and MI totals over the |langs| x |sources| cells (<= 5 x 20)"
+    ),
+    "q_diff_in_diff": "DiD estimator sum over the 4-row 2x2 cell table",
+    "q_temperature_mixture": "share totals over the 20-row per-source table",
+    "q_post_stratification": "grand total and n_langs over the 5-row marginal",
+    "q_consistent_resharding": (
+        "totals over the <= 8 x 10 (old shard, new shard) movement matrix"
+    ),
+    "q_benford_digits": "chi-square N over the <= 9 leading-digit rows",
+    "q_calibration_ece": "ECE totals over the <= 10 confidence-bin rows",
+    "q_woe_iv": "IV total over the 5-row o_orderpriority bin table",
 }
 
 
@@ -589,11 +632,12 @@ def test_r7_topk_rewrites_plan_take_ordered(spark):
         assert count_keyless_windows_in(plan) == 0, (
             f"{name}: keyless window survived the rewrite"
         )
-    # RBO keeps two <=10-row rank windows AFTER its TakeOrdered limits
+    # RBO keeps two <=10-row rank windows AFTER its TakeOrdered limits,
+    # plus the OVER () RBO_min total over the constant 10-row depth spine
     df = REGISTRY["q_rank_biased_overlap"].fn(spark, SF)
     plan = formatted_plan(df)
     assert "TakeOrderedAndProject" in plan
-    assert count_keyless_windows_in(plan) <= 2
+    assert count_keyless_windows_in(plan) == 3
 
 
 def test_sprt_two_phase_no_fact_table_window(spark):

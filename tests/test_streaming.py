@@ -5,6 +5,10 @@ results against the batch operators — same expressions, same answers.
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,11 +16,13 @@ from data_lake_with_spark_and_aws_s3_spark import REGISTRY
 from data_lake_with_spark_and_aws_s3_spark.streaming import (
     run_to_memory,
     stream_events,
+    stream_events_with_wm_sentinel,
     streaming_dedup,
     streaming_tumbling,
 )
 
-SF = "/root/testdata/sf0.001"
+from .conftest import SMOKE_SF_DIR as SF
+from .test_etl import _clear_job_group, _tracker
 
 
 def test_streaming_tumbling_matches_batch(spark):
@@ -37,6 +43,80 @@ def test_streaming_tumbling_matches_batch(spark):
     for k, v in got.items():
         assert batch[k] == v, k
     assert len(got) >= len(batch) - 10
+
+
+def test_second_sentinel_stream_launches_no_job(spark):
+    """The sentinel source stages its files once; a later call takes
+    the memoized read schema and launches no job."""
+    stream_events_with_wm_sentinel(spark, SF)
+    sc = spark.sparkContext
+    sc.setJobGroup("sentinel-second-call", "stream_events_with_wm_sentinel")
+    try:
+        stream_events_with_wm_sentinel(spark, SF)
+        assert _tracker(sc).getJobIdsForGroup("sentinel-second-call") == []
+    finally:
+        _clear_job_group(sc)
+
+
+def test_stream_reads_a_rewritten_events_table(spark, tmp_path):
+    """events.parquet rewritten in the same process (a new column, a
+    new mtime) streams with its new schema, not the first one seen."""
+    path = tmp_path / "events.parquet"
+
+    def write(mtime: int, **extra) -> None:
+        pq.write_table(pa.table({
+            "event_id": [1, 2],
+            "ts": pa.array([0, 60_000_000], pa.timestamp("us")),
+            "user_id": [7, 7],
+            "event_type": ["click", "purchase"],
+            "value": [1.0, 2.0],
+            "props": ["{}", "{}"],
+            **extra,
+        }), path)
+        os.utime(path, (mtime, mtime))
+
+    write(1_600_000_000)
+    assert "channel" not in stream_events(spark, str(tmp_path)).columns
+    write(1_600_000_100, channel=["web", "app"])
+    events = stream_events(spark, str(tmp_path))
+    assert events.dtypes[1] == ("ts", "timestamp")
+    assert events.dtypes[-1] == ("channel", "string")
+    run_to_memory(events, "t_rewritten_events")
+    got = spark.table("t_rewritten_events").select("channel").collect()
+    assert sorted(r.channel for r in got) == ["app", "web"]
+
+
+@pytest.mark.parametrize("unit", ["us", "ns"])
+def test_sentinels_follow_a_rewritten_events_table(spark, tmp_path, unit):
+    """The watermark sentinels are stamped past the table's max(ts) in
+    the type the stream reads ts with (TIMESTAMP, or long nanos under
+    nanosAsLong): a rewrite to later events stages new ones."""
+    path = tmp_path / "events.parquet"
+    hour_us = 3_600_000_000
+
+    def write(last_hour: int, mtime: int) -> None:
+        us = [0, last_hour * hour_us]
+        pq.write_table(pa.table({
+            "event_id": [1, 2],
+            "ts": pa.array([u * 1000 if unit == "ns" else u for u in us], pa.timestamp(unit)),
+            "user_id": [7, 7],
+            "event_type": ["click", "purchase"],
+            "value": [1.0, 2.0],
+            "props": ["{}", "{}"],
+        }), path)
+        os.utime(path, (mtime, mtime))
+
+    write(1, 1_600_000_000)
+    stream_events_with_wm_sentinel(spark, str(tmp_path))
+    write(10, 1_600_000_100)
+    run_to_memory(stream_events_with_wm_sentinel(spark, str(tmp_path)), f"t_sentinels_{unit}")
+    rows = spark.table(f"t_sentinels_{unit}").select(
+        "user_id", F.unix_micros("ts").alias("us")
+    ).collect()
+    assert sorted(r.us for r in rows if r.user_id == 7) == [0, 10 * hour_us]
+    assert sorted(r.us for r in rows if r.user_id == -1) == [
+        k * hour_us for k in (11, 11, 12, 12, 13, 13)
+    ]
 
 
 def test_streaming_dedup(spark):
