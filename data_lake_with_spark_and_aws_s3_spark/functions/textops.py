@@ -1,5 +1,19 @@
-"""Shared text-expression builders tuned in the round-8 optimization
-pass (guide §1.2 step 2: per-task work, after the plan shape is right).
+"""The one place that says how `documents.text` splits into units.
+
+- words(): the raw single-space split, empty tokens KEPT — DuckDB's
+  `string_split(text, ' ')`, which the shingle oracles index by
+  position.
+- tokens(): words() with the empty tokens removed (multi-space safe) —
+  `list_filter(string_split(text, ' '), x -> x <> '')`.
+- token_set(): the distinct tokens (token-set Jaccard, vocabularies).
+- shingles(n): the distinct word n-grams, joined by ' ', over words()
+  — the near-duplicate family's 4-gram grain.
+
+A caller that reuses one split several times selects `words()` (or
+`tokens()`) into its own column first and hands that column to
+shingle_set / ngram_join: Catalyst then keeps the split in its own
+(codegen'd) Project; a split written inside the n-gram expression is
+inlined at every slice that reads it, with one Project fewer.
 
 ngram_join(toks, n) builds the word n-gram array the zip-form way:
 n constant-count slices of the token array zipped with concat_ws —
@@ -18,6 +32,31 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+
+def words() -> Column:
+    """`text` split on single spaces; empty tokens kept."""
+    return F.split(F.col("text"), " ")
+
+
+def tokens() -> Column:
+    """words() without the empty tokens."""
+    return F.filter(words(), lambda x: x != "")
+
+
+def token_set() -> Column:
+    """The distinct tokens() of `text`."""
+    return F.array_distinct(tokens())
+
+
+def shingles(n: int) -> Column:
+    """The distinct word n-grams of `text` (over words())."""
+    return shingle_set(words(), n)
+
+
+def shingle_set(toks: Column, n: int) -> Column:
+    """The distinct n-grams of an already-split token array."""
+    return F.array_distinct(ngram_join(toks, n))
 
 
 def ngram_join(toks: Column, n: int) -> Column:

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import dec, money_sum
+from ..functions.textops import words
 from ..registry import query
 from ..sources.loader import load_table
 from ._edges import copurchase_edges
@@ -79,7 +80,7 @@ def q_token_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-broken ranking."""
     d = load_table(spark, sf_dir, "documents")
     dt = (
-        d.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok"))
+        d.select("doc_id", F.explode(words()).alias("tok"))
         .filter(F.col("tok") != "")
         .distinct()
     )

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.textops import tokens
 from ..registry import query
 from .llm_pipeline import _hex_val_sql
 
@@ -128,7 +129,7 @@ def q_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.loader import load_table
 
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda x: x != "")
+    toks = tokens()
     doc = d.select(
         "lang", "source", "text", F.size(toks).alias("n_toks")
     ).agg(

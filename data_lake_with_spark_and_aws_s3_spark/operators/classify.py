@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.textops import tokens, words
 from ..registry import query
 from ..sources.loader import load_table
 
@@ -152,7 +153,7 @@ def _nb_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select(
             "doc_id",
             F.col("lang").alias("lang_true"),
-            F.explode(F.split("text", " ")).alias("term"),
+            F.explode(words()).alias("term"),
         ).filter(F.col("term") != "")
     )
     lt = tok.groupBy(F.col("lang_true").alias("lang")).agg(
@@ -530,7 +531,7 @@ def q_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduction is a single 1-row aggregate. Nothing shuffles but three
     longs per partition."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda x: x != "")
+    toks = tokens()
     n_words = F.size(toks)
     vote1 = F.when(n_words.between(50, 100000), 1).otherwise(0)
     stop = F.array_distinct(
@@ -644,7 +645,7 @@ def q_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_fleiss_kappa expressions — shared semantics), one 1-row moment
     aggregate; nothing shuffles but six longs per partition."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda x: x != "")
+    toks = tokens()
     n_words = F.size(toks)
     v1 = F.when(n_words.between(50, 100000), 1).otherwise(0)
     stop = F.array_distinct(
@@ -735,7 +736,7 @@ def q_icc_reliability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side vote projection, one 1-row moment aggregate."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda x: x != "")
+    toks = tokens()
     n_words = F.size(toks)
     v1 = F.when(n_words.between(50, 100000), 1).otherwise(0)
     stop = F.array_distinct(

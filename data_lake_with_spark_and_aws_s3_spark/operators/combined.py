@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.textops import words
 from ..registry import query
 from ..sources.loader import load_table
 
@@ -98,7 +99,7 @@ def q_math_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     array_contains) and math ops (sqrt / ceil / mod) over the token
     array of each document — all JVM builtins, whole-stage codegen."""
     d = load_table(spark, sf_dir, "documents")
-    arr = F.split("text", " ")
+    arr = words()
     n_tok = F.size(arr).cast("long")
     return d.select(
         "doc_id",

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.textops import ngram_join
+from ..functions.textops import ngram_join, shingle_set, tokens, words
 from ..registry import query
 from ..sources.loader import fan_out, load_table
 from ._sqlutil import _hex_val_sql
@@ -32,10 +32,6 @@ from ._sqlutil import _hex_val_sql
 # ---------------------------------------------------------------------
 
 _BPE_ROUNDS = 4
-
-
-def _tok_array() -> Column:
-    return F.filter(F.split(F.col("text"), " "), lambda x: x != "")
 
 
 def _char_split(word: Column) -> Column:
@@ -204,7 +200,7 @@ def _bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     greedy merges. Shared by the train and apply queries."""
     d = load_table(spark, sf_dir, "documents")
     words = (
-        d.select(F.explode(_tok_array()).alias("word"))
+        d.select(F.explode(tokens()).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -291,7 +287,7 @@ def q_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "word", F.size("sym").alias("n_syms")
     )
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(_tok_array()).alias("word")).filter(
+    toks = d.select("doc_id", F.explode(tokens()).alias("word")).filter(
         F.col("word") != ""
     )
     return (
@@ -398,7 +394,7 @@ def duplicate_span_scrub(d: DataFrame) -> DataFrame:
     (verbatim copies, overlapping spans) without touching testdata."""
     # r8: scan fan-out + zip-form grams (identical gram strings and
     # positions; posexplode supplies pos = array index + 1)
-    t = fan_out(d).select("doc_id", _tok_array().alias("toks"))
+    t = fan_out(d).select("doc_id", tokens().alias("toks"))
     grams = t.select(
         "doc_id",
         F.posexplode(ngram_join(F.col("toks"), _SPAN_N)).alias("pos0", "gram"),
@@ -525,7 +521,7 @@ def q_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     for m, name in _BENCHMARKS:
         cond = F.col("doc_id") % m == 0
         bench = F.when(cond, F.lit(name)) if bench is None else bench.when(cond, F.lit(name))
-    tagged = d.select("doc_id", _tok_array().alias("toks"), bench.alias("benchmark"))
+    tagged = d.select("doc_id", tokens().alias("toks"), bench.alias("benchmark"))
 
     # r8: zip-form grams (identical values)
     grams = tagged.select(
@@ -692,8 +688,8 @@ def q_ngram_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Never rescans the corpus per curve point."""
     # r8: scan fan-out + zip-form grams (identical values)
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    tk = d.select("doc_id", F.split("text", " ").alias("tk"))
-    grams = F.array_distinct(ngram_join(F.col("tk"), 3))
+    tk = d.select("doc_id", words().alias("tk"))
+    grams = shingle_set(F.col("tk"), 3)
     sh = tk.select("doc_id", F.explode(grams).alias("gram"))
     ev = sh.filter(F.col("doc_id") % 7 == 0).select("gram").distinct()
     bucket = (
@@ -802,9 +798,7 @@ def q_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # textops.ngram_join — identical gram strings and positions,
     # parallel and per-row-cheaper construction).
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    tk = d.select(
-        "doc_id", F.filter(F.split("text", " "), lambda x: x != "").alias("tk")
-    )
+    tk = d.select("doc_id", tokens().alias("tk"))
     grams_arr = F.transform(ngram_join(F.col("tk"), _WIN_K), lambda g: F.md5(g))
     grams = tk.select(
         "doc_id", F.posexplode(grams_arr).alias("pos0", "h")
@@ -854,7 +848,7 @@ def _unigram_doc_ce(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept."""
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("term")
+        "doc_id", F.explode(words()).alias("term")
     ).filter(F.col("term") != "")
     vocab = tok.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
     tot = vocab.agg(

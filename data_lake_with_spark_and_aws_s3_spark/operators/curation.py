@@ -38,10 +38,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.textops import ngram_join
+from ..functions.textops import shingle_set, tokens, words
 from ..registry import query
 from ..sources.loader import fan_out, load_table
-from .text import _SW_SQL, _STOPWORDS, tokens
+from .text import _SW_SQL, _STOPWORDS
 
 # --- Gopher quality-rule battery -------------------------------------
 
@@ -651,8 +651,8 @@ def q_submodular_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(1) deep. k is a constant of the operator."""
     # r8: scan fan-out + zip-form shingles (identical values)
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    tk = d.select("doc_id", F.split("text", " ").alias("tk"))
-    shingles = F.array_distinct(ngram_join(F.col("tk"), 4))
+    tk = d.select("doc_id", words().alias("tk"))
+    shingles = shingle_set(F.col("tk"), 4)
     ds = (
         tk.filter(F.size("tk") >= 4)
         .select("doc_id", F.explode(shingles).alias("sh"))
@@ -895,7 +895,7 @@ def q_waterfill_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeds q_stratified_exact_quota-style per-source selection as its
     quota vector."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda x: x != "")
+    toks = tokens()
     mass = (
         d.select("source", F.size(toks).alias("n"))
         .groupBy("source")

@@ -22,9 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.textops import tokens
 from ..registry import query
 from ..sources.loader import load_table
-from .text import tokens
 
 _EPOCHS = 2
 _SHARDS = 8
@@ -204,9 +204,7 @@ def q_padding_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = d.select(
         "doc_id",
         "lang",
-        F.size(F.filter(F.split("text", " "), lambda x: x != F.lit(""))).cast(
-            "bigint"
-        ).alias("n_tokens"),
+        F.size(tokens()).cast("bigint").alias("n_tokens"),
     )
     b = t.select(
         "lang",

@@ -15,8 +15,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import dec, money_sum
+from ..functions.textops import tokens, words
 from ..registry import query
 from ..sources.loader import load_table
+from .neardup import _ML_CONFIG, _ml_sig_sql, ml_bands_maponly
 
 _SLIDE_US = 900_000_000  # 15 min
 _GAP = "30 minutes"
@@ -936,57 +938,11 @@ def q_token_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _snd_bands_sql() -> str:
-    """Oracle fragment: md5-portable MinHash band rows + shingle arrays
-    for ALL documents (the _ml_exact_pairs scheme — 16 four-hex-digit
-    lanes over two digests, 4 bands of 4), as CTEs `sh` (doc_id, s)
-    and `bands` (doc_id, band, bh). Mirrors neardup.ml_bands_maponly's
-    map-only derivation value-for-value (min over exploded posting
-    rows == array_min over the same array)."""
-    from .neardup import _ML_BANDS, _ML_SEEDS, _hex_window_sql, _ml_lane
-
-    sig_cols = ",\n             ".join(
-        "MIN({w}) AS m{i}".format(w=_hex_window_sql(*_ml_lane(i)), i=i)
-        for i in range(_ML_SEEDS)
-    )
-    band_rows = "\n      UNION ALL\n      ".join(
-        "SELECT doc_id, {b} AS band, md5({concat}) AS bh FROM sig".format(
-            b=b,
-            concat=" || '_' || ".join(
-                f"CAST(m{4 * b + j} AS VARCHAR)" for j in range(4)
-            ),
-        )
-        for b in range(_ML_BANDS)
-    )
-    return f"""
-    WITH ts AS (
-      SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-    ), sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               range(0, greatest(len(toks) - 3, 0)),
-               i -> array_to_string(toks[i+1:i+4], ' '))) AS s
-      FROM ts WHERE len(toks) >= 4
-    ), ex AS (
-      SELECT doc_id, unnest(s) AS shingle FROM sh
-    ), dg AS (
-      SELECT doc_id,
-             md5(shingle || '#0') AS d0,
-             md5(shingle || '#1') AS d1
-      FROM ex
-    ), sig AS (
-      SELECT doc_id,
-             {sig_cols}
-      FROM dg GROUP BY doc_id
-    ), bands AS (
-      {band_rows}
-    )
-    """
-
-
 @query(
     "q_streaming_neardup_exec",
-    oracle=_snd_bands_sql()
+    # the md5-portable band rows of ALL documents (neardup's 16 lanes,
+    # 4 bands of 4); ml_bands_maponly derives the same rows map-only
+    oracle=_ml_sig_sql(_ML_CONFIG)
     + """
     , pairs AS (
       SELECT a.doc_id AS new_doc_id, i.doc_id AS corpus_doc_id,
@@ -1030,7 +986,6 @@ def q_streaming_neardup_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     (band, bh); state is keyed by matched PAIRS (near-dup hits), not
     by the stream — bounded by true duplication, not volume."""
     from ..streaming import run_to_memory, stream_documents
-    from .neardup import ml_bands_maponly
 
     d = load_table(spark, sf_dir, "documents")
     idx = ml_bands_maponly(d.filter(F.col("doc_id") % 2 == 0)).select(
@@ -1433,7 +1388,7 @@ def q_streaming_quality_gate_exec(spark: SparkSession, sf_dir: str) -> DataFrame
     from .text import _STOPWORDS
 
     d = stream_documents(spark, sf_dir).select("doc_id", "source", "text")
-    toks = F.filter(F.split("text", " "), lambda x: x != "")
+    toks = tokens()
     n_words = F.size(toks).cast("long")
     n_chars = F.aggregate(
         F.transform(toks, lambda x: F.length(x).cast("long")),
@@ -1534,7 +1489,7 @@ def q_streaming_cms_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = stream_documents(spark, sf_dir).select("doc_id", "text")
     toks = d.select(
-        F.explode(F.split(F.col("text"), " ")).alias("tok")
+        F.explode(words()).alias("tok")
     ).filter(F.col("tok") != "")
     seeds = F.explode(F.array(*[F.lit(i) for i in range(DEPTH)])).alias(
         "seed"
@@ -1554,7 +1509,7 @@ def q_streaming_cms_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the sketch estimates), identical to the batch operator
     d_batch = load_table(spark, sf_dir, "documents")
     toks_b = d_batch.select(
-        F.explode(F.split(F.col("text"), " ")).alias("tok")
+        F.explode(words()).alias("tok")
     ).filter(F.col("tok") != "")
     exact = (
         toks_b.groupBy("tok")

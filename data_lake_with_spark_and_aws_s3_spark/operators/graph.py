@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.textops import tokens
 from ..registry import query
 from ..sources.loader import load_table
 from ._edges import copurchase_edges, trade_edges
@@ -241,12 +242,7 @@ def q_dedup_clusters_exact_smallcorpus(spark: SparkSession, sf_dir: str) -> Data
     (a cross-token collision inside one block would be needed to shift
     a count; at 2^-64 per pair that is ignorable even at 100 TB)."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.array_distinct(
-        F.transform(
-            F.filter(F.split("text", " "), lambda x: x != ""),
-            lambda x: F.xxhash64(x),
-        )
-    )
+    toks = F.array_distinct(F.transform(tokens(), lambda x: F.xxhash64(x)))
     t = d.select("doc_id", "lang", "source", toks.alias("ts"))
     a = t.select(
         F.col("doc_id").alias("src"), F.col("lang").alias("la"),
@@ -762,7 +758,7 @@ def q_cluster_representative(spark: SparkSession, sf_dir: str) -> DataFrame:
     every consumer reads the labels."""
     clusters = _lsh_cluster_frame(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda x: x != "")
+    toks = tokens()
     scored = clusters.join(
         d.select(
             "doc_id",

@@ -21,7 +21,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from ..functions.textops import ngram_join
+from ..functions.textops import shingle_set, tokens, words
 from ..registry import query
 from ..sources.loader import fan_out, load_table
 from .text import _STOPWORDS, _SW_SQL
@@ -69,8 +69,8 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one aggregate shuffle. O(corpus) with no candidate explosion."""
     # r8: scan fan-out + zip-form shingles (identical values)
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    tk = d.select("doc_id", F.split("text", " ").alias("tk"))
-    shingles = F.array_distinct(ngram_join(F.col("tk"), 4))
+    tk = d.select("doc_id", words().alias("tk"))
+    shingles = shingle_set(F.col("tk"), 4)
     sh = tk.select("doc_id", F.explode(shingles).alias("shingle"))
     ev = sh.filter(F.col("doc_id") % 97 == 0).select("shingle").distinct()
     return (
@@ -183,9 +183,7 @@ def q_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions: Catalyst's common-subexpression elimination does not
     reach inside higher-order-function lambdas, so the inline form
     re-splits the text once per metric (measured 4.6x slower)."""
-    d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.filter(F.split("text", " "), lambda x: x != "").alias("ts")
-    )
+    d = load_table(spark, sf_dir, "documents").select("doc_id", tokens().alias("ts"))
     ts = F.col("ts")
     n = F.size(ts)
     bigrams = F.transform(
@@ -296,7 +294,7 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode(sequence(...)) is map-side — one scan, no shuffle; chunk
     counts scale with corpus size, never quadratically."""
     d = load_table(spark, sf_dir, "documents")
-    ts = F.split("text", " ")
+    ts = words()
     starts = F.sequence(F.lit(0), F.size(ts) - 1, F.lit(16))
     s = d.select("doc_id", ts.alias("ts"), F.explode(starts).alias("start"))
     chunk = F.slice("ts", F.col("start") + 1, 32)
@@ -347,7 +345,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets); semantics are unchanged. Integer token counts make every
     offset exact cross-engine."""
     d = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(F.filter(F.split("text", " "), lambda x: x != "")).cast("long")
+    n_tokens = F.size(tokens()).cast("long")
     t = d.select(
         "doc_id", "lang", "source", n_tokens.alias("n_tokens"),
         F.md5(F.col("doc_id").cast("string")).alias("pri"),
@@ -522,7 +520,7 @@ def q_token_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id",
-        F.explode(F.filter(F.split("text", " "), lambda x: x != "")).alias("tok"),
+        F.explode(tokens()).alias("tok"),
     )
     vocab = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
     return (
@@ -634,14 +632,14 @@ def q_filter_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Flags are exact integer/set predicates (no floats): repetition =
     more than half the tokens are repeats of earlier tokens."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
+    toks = words()
     flags = d.select(
         "doc_id",
         (F.col("n_chars") < 100).alias("too_short"),
         (~F.col("lang").isin("en", "es", "de", "fr")).alias("lang_blocked"),
         (
             (F.size(toks) - F.size(F.array_distinct(toks)))
-            > F.expr("size(split(text, ' ')) div 2")
+            > F.call_function("div", F.size(toks), F.lit(2))
         ).alias("high_repetition"),
     )
     return flags.cube("too_short", "lang_blocked", "high_repetition").agg(
@@ -711,7 +709,7 @@ def q_model_inference_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.Series(logit)
 
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda x: x != "")
+    toks = tokens()
     return d.select(
         "doc_id",
         F.size(toks).cast("long").alias("n_tokens"),
@@ -764,20 +762,14 @@ def q_quality_percentile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter map-side); the output CONTRACT is identical, which is why
     the window form is the registered truth."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda x: x != "")
+    toks = tokens()
     n_tokens = F.size(toks).cast("long")
-    n_stop = F.size(
-        F.filter(toks, lambda x: x.isin(*_STOPWORDS))
-    ).cast("long")
+    n_stop = F.size(F.filter(words(), lambda x: x.isin(*_STOPWORDS))).cast("long")
     scored = d.select(
         "doc_id",
         "lang",
         (
-            F.expr(
-                f"""(CAST(size(filter(split(text, ' '), x -> x IN ({_SW_SQL}))) AS BIGINT)
-                    * 500000)
-                   div CAST(size(filter(split(text, ' '), x -> x != '')) AS BIGINT)"""
-            )
+            F.call_function("div", n_stop * 500000, n_tokens)
             + F.least(n_tokens, F.lit(500))
         ).alias("score_units"),
     )

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.textops import ngram_join
+from ..functions.textops import shingle_set, tokens, words
 from ..registry import query
 from ..sources.loader import fan_out, load_table
 from .neardup import _ml_exact_pairs, _ml_oracle
@@ -56,7 +56,7 @@ def _token_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped; the shared input for both ml pipelines."""
     return load_table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.filter(F.split("text", " "), lambda x: x != "").alias("toks"),
+        tokens().alias("toks"),
     )
 
 
@@ -146,9 +146,9 @@ def ml_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r8: scan fan-out + zip-form shingles (identical values)
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    tk = d.select("doc_id", F.split("text", " ").alias("tk"))
+    tk = d.select("doc_id", words().alias("tk"))
     sets = tk.select(
-        "doc_id", F.array_distinct(ngram_join(F.col("tk"), 4)).alias("toks")
+        "doc_id", shingle_set(F.col("tk"), 4).alias("toks")
     ).filter(F.size("toks") > 0)
     tf = HashingTF(
         inputCol="toks", outputCol="vec", numFeatures=_MH_DIM, binary=True

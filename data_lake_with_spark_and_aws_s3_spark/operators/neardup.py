@@ -16,21 +16,17 @@ Scale posture — the whole point of this family:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..functions.textops import ngram_join
+from ..functions.textops import ngram_join, shingle_set, token_set, tokens, words
 from ..registry import query
 from ..sources.loader import fan_out, load_table
 from ._pin import pin
 
 _N_MINHASH = 16
 _N_BANDS = 4  # 4 hashes per band
-
-
-def _token_set():
-    return F.array_distinct(F.filter(F.split(F.col("text"), " "), lambda x: x != ""))
 
 
 @query(
@@ -65,7 +61,7 @@ def q_ngram_jaccard_pairs_exact_smallcorpus(spark: SparkSession, sf_dir: str) ->
     Jaccard = |A∩B| / (|A|+|B|-|A∩B|): one division of identical
     integers — bit-exact cross-engine."""
     d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "source", _token_set().alias("ts")
+        "doc_id", "lang", "source", token_set().alias("ts")
     )
     a = d.select(F.col("doc_id").alias("doc_a"), F.col("lang").alias("lang_a"),
                  F.col("source").alias("src_a"), F.col("ts").alias("ts_a"))
@@ -98,9 +94,8 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     the 8-byte base value is ~3x cheaper per lane and the lanes stay
     pairwise-independent for MinHash purposes).
     """
-    toks = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
     base = docs.select(
-        "doc_id", F.transform(toks, lambda t: F.xxhash64(t)).alias("th")
+        "doc_id", F.transform(tokens(), lambda t: F.xxhash64(t)).alias("th")
     )
     sig = F.array(
         *[
@@ -164,11 +159,7 @@ def xx_lsh_pairs(d: DataFrame) -> DataFrame:
     # exact verify on the (small) candidate set; token sets are
     # int64-hashed (intersection counts identical modulo 2^-64
     # collisions — see q_dedup_clusters note)
-    hashed_ts = F.array_distinct(
-        F.transform(
-            F.filter(F.split("text", " "), lambda x: x != ""), lambda x: F.xxhash64(x)
-        )
-    )
+    hashed_ts = F.array_distinct(F.transform(tokens(), lambda x: F.xxhash64(x)))
     tok = d.select("doc_id", hashed_ts.alias("ts"))
     inter = F.size(F.array_intersect("ts_a", "ts_b"))
     union = F.size("ts_a") + F.size("ts_b") - inter
@@ -232,7 +223,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch is value-checked cross-engine (see _SIMHASH_SUMS note)."""
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
-        "doc_id", F.explode(F.filter(F.split("text", " "), lambda x: x != "")).alias("t")
+        "doc_id", F.explode(tokens()).alias("t")
     ).withColumn("h", F.md5("t"))
     # hex digit values once per token, bits sliced from them
     digits = [
@@ -392,6 +383,16 @@ def q_substring_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _shingle_arrays(d: DataFrame, *keep: str) -> DataFrame:
+    """(doc_id, *keep, s): each document's 4-gram shingle set, docs
+    with none dropped. The split is its own column, so Catalyst keeps
+    it in one Project instead of inlining it into every slice."""
+    tk = d.select("doc_id", *keep, words().alias("tk"))
+    return tk.select("doc_id", *keep, shingle_set(F.col("tk"), 4).alias("s")).filter(
+        F.size("s") > 0
+    )
+
+
 # --- Prefix-filtering set-similarity join (AllPairs/PPJoin family) ---
 
 _PF_T_NUM, _PF_T_DEN = 1, 2  # Jaccard threshold t = 1/2
@@ -459,10 +460,7 @@ def prefix_filter_pairs(d: DataFrame) -> DataFrame:
     Round 8: scan fan-out + zip-form shingles (loader.fan_out /
     textops.ngram_join docstrings — identical values, parallel and
     per-row-cheaper construction)."""
-    tk = fan_out(d).select("doc_id", F.split("text", " ").alias("tk"))
-    arr = tk.select(
-        "doc_id", F.array_distinct(ngram_join(F.col("tk"), 4)).alias("s")
-    ).filter(F.size("s") > 0)
+    arr = _shingle_arrays(fan_out(d))
     sh = arr.select("doc_id", F.size("s").alias("len"), F.explode("s").alias("tok"))
     dfreq = sh.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
 
@@ -516,9 +514,18 @@ def prefix_filter_pairs(d: DataFrame) -> DataFrame:
 
 
 # --- Oracle-checked MinHash-LSH twin (md5-portable hashing) ----------
+#
+# The scheme, written once for each engine: a document's 4-gram shingle
+# set s -> two md5 digests per shingle -> 16 lanes (4-hex-digit windows
+# of the digests) -> per-lane min = signature m0..m15 -> band keys
+# md5(concat_ws('_', lanes of the band)) for each (n_bands,
+# rows_per_band) config. Spark: _ml_signatures / ml_bands_maponly and
+# _ml_bands. DuckDB: _ml_sig_sql.
 
 _ML_SEEDS = 16
 _ML_BANDS = 4  # 4 seeds per band
+_ML_CONFIG = ((_ML_BANDS, _ML_SEEDS // _ML_BANDS),)  # (n_bands, rows_per_band)
+_LSH_CONFIGS = ((2, 8), (4, 4), (8, 2))  # q_lsh_parameter_curve's grid
 
 
 def _hex_window_sql(h: str, start: int) -> str:
@@ -538,19 +545,86 @@ def _ml_lane(lane: int) -> tuple[str, int]:
     return (f"d{lane // 8}", 4 * (lane % 8) + 1)
 
 
-def _ml_oracle() -> str:
+def _ml_digest(shingle: Column, k: int) -> Column:
+    """Digest k (0 or 1) of a shingle: md5(shingle || '#k')."""
+    return F.md5(F.concat(shingle, F.lit(f"#{k}")))
+
+
+def _ml_lane_sql(h: str, lane: int) -> str:
+    """Spark SQL value of `lane` read off digest `h` (conv() parse;
+    the oracle digit-parses the same window)."""
+    return f"CAST(conv(substr({h}, {_ml_lane(lane)[1]}, 4), 16, 10) AS BIGINT)"
+
+
+def _ml_signatures(arr: DataFrame) -> DataFrame:
+    """(doc_id, m0..m15) from (doc_id, s) shingle arrays, the aggregate
+    form: explode to posting rows, two md5 digests per row, 16 lanes as
+    COLUMNS (no seed-explode), then 16 plain mins that partial-combine
+    map-side. md5, the dominant cost, runs 2x per posting instead of
+    16x."""
+    ex = arr.select("doc_id", F.explode("s").alias("shingle"))
+    dg = ex.select(
+        "doc_id",
+        _ml_digest(F.col("shingle"), 0).alias("d0"),
+        _ml_digest(F.col("shingle"), 1).alias("d1"),
+    )
+    hv = dg.select(
+        "doc_id",
+        *[
+            F.expr(_ml_lane_sql(_ml_lane(i)[0], i)).alias(f"h{i}")
+            for i in range(_ML_SEEDS)
+        ],
+    )
+    return hv.groupBy("doc_id").agg(
+        *[F.min(f"h{i}").alias(f"m{i}") for i in range(_ML_SEEDS)]
+    )
+
+
+def _ml_bands(sig: DataFrame, keep: tuple, configs: tuple) -> DataFrame:
+    """Band rows (doc_id, *keep, [n_bands,] band, bh) of signatures
+    m0..m15: band b of an (n_bands, rows_per_band) config keys on
+    md5(concat_ws('_', m[rpb*b] .. m[rpb*b + rpb - 1])). Only a grid
+    of several configs tags its rows with n_bands; a single config's
+    band struct stays (band, bh), so those plans do not carry it."""
+    tag = len(configs) > 1
+    structs = [
+        F.struct(
+            *([F.lit(nb).alias("n_bands")] if tag else []),
+            F.lit(b).alias("band"),
+            F.md5(
+                F.concat_ws(
+                    "_", *[F.col(f"m{rpb * b + j}").cast("string") for j in range(rpb)]
+                )
+            ).alias("bh"),
+        )
+        for nb, rpb in configs
+        for b in range(nb)
+    ]
+    fields = (["n_bands"] if tag else []) + ["band", "bh"]
+    return sig.select("doc_id", *keep, F.explode(F.array(*structs)).alias("x")).select(
+        "doc_id", *keep, *[F.col(f"x.{f}").alias(f) for f in fields]
+    )
+
+
+def _ml_sig_sql(configs: tuple) -> str:
+    """DuckDB CTEs `ts`, `sh` (doc_id, s), `ex`, `dg`, `sig` (doc_id,
+    m0..m15) and `bands` (n_bands, doc_id, band, bh): the same scheme,
+    stated independently of the Spark builders. Callers append their
+    own CTEs and SELECT."""
     sig_cols = ",\n             ".join(
         "MIN({w}) AS m{i}".format(w=_hex_window_sql(*_ml_lane(i)), i=i)
         for i in range(_ML_SEEDS)
     )
     band_rows = "\n      UNION ALL\n      ".join(
-        "SELECT doc_id, {b} AS band, md5({concat}) AS bh FROM sig".format(
+        "SELECT {nb} AS n_bands, doc_id, {b} AS band, md5({concat}) AS bh FROM sig".format(
+            nb=nb,
             b=b,
             concat=" || '_' || ".join(
-                f"CAST(m{4 * b + j} AS VARCHAR)" for j in range(4)
+                f"CAST(m{rpb * b + j} AS VARCHAR)" for j in range(rpb)
             ),
         )
-        for b in range(_ML_BANDS)
+        for nb, rpb in configs
+        for b in range(nb)
     )
     return f"""
     WITH ts AS (
@@ -574,7 +648,11 @@ def _ml_oracle() -> str:
       FROM dg GROUP BY doc_id
     ), bands AS (
       {band_rows}
-    ), cand AS (
+    )"""
+
+
+def _ml_oracle() -> str:
+    return _ml_sig_sql(_ML_CONFIG) + """, cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a JOIN bands b
         ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
@@ -624,53 +702,8 @@ def _ml_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Round 8: scan fan-out + zip-form shingles (loader.fan_out /
     textops.ngram_join — identical values, parallel construction)."""
-    d = fan_out(load_table(spark, sf_dir, "documents"))
-    tk = d.select("doc_id", F.split("text", " ").alias("tk"))
-    arr = tk.select(
-        "doc_id", F.array_distinct(ngram_join(F.col("tk"), 4)).alias("s")
-    ).filter(F.size("s") > 0)
-    ex = arr.select("doc_id", F.explode("s").alias("shingle"))
-    # Two md5 digests per posting row; 16 lanes are 4-hex-digit windows
-    # of those digests, as COLUMNS (no seed-explode): md5 — the
-    # dominant cost — runs 2x per posting instead of 16x, and the
-    # aggregate partial-combines 16 plain mins map-side. Spark parses
-    # windows with conv() (cheaper); the oracle digit-parses the same
-    # windows — identical integers either way.
-    dg = ex.select(
-        "doc_id",
-        F.md5(F.concat(F.col("shingle"), F.lit("#0"))).alias("d0"),
-        F.md5(F.concat(F.col("shingle"), F.lit("#1"))).alias("d1"),
-    )
-    hv = dg.select(
-        "doc_id",
-        *[
-            F.expr(
-                "CAST(conv(substr({d}, {off}, 4), 16, 10) AS BIGINT)".format(
-                    d=_ml_lane(i)[0], off=_ml_lane(i)[1]
-                )
-            ).alias(f"h{i}")
-            for i in range(_ML_SEEDS)
-        ],
-    )
-    sig = hv.groupBy("doc_id").agg(
-        *[F.min(f"h{i}").alias(f"m{i}") for i in range(_ML_SEEDS)]
-    )
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "_", *[F.col(f"m{4 * b + j}").cast("string") for j in range(4)]
-                    )
-                ).alias("bh"),
-            )
-            for b in range(_ML_BANDS)
-        ]
-    )
-    bands = sig.select("doc_id", F.explode(band_arr).alias("x")).select(
-        "doc_id", F.col("x.band").alias("band"), F.col("x.bh").alias("bh")
-    )
+    arr = _shingle_arrays(fan_out(load_table(spark, sf_dir, "documents")))
+    bands = _ml_bands(_ml_signatures(arr), (), _ML_CONFIG)
     a = bands.select(F.col("doc_id").alias("doc_a"), "band", "bh")
     b = bands.select(F.col("doc_id").alias("doc_b"), "band", "bh")
     cand = (
@@ -762,10 +795,7 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # raw-token precision check of the xx-verified pairs
     raw = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.array_distinct(
-            F.filter(F.split("text", " "), lambda x: x != "")
-        ).alias("rs"),
+        "doc_id", token_set().alias("rs")
     )
     inter = F.size(F.array_intersect("rs_a", "rs_b"))
     union = F.size("rs_a") + F.size("rs_b") - inter
@@ -857,10 +887,7 @@ def q_repeated_ngram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     of two exact ints, and the flag threshold compares that identical
     double in both engines — no accumulation anywhere."""
     # r8: scan fan-out + zip-form grams (identical values)
-    d = fan_out(load_table(spark, sf_dir, "documents")).select(
-        "doc_id",
-        F.filter(F.split("text", " "), lambda x: x != F.lit("")).alias("ts"),
-    )
+    d = fan_out(load_table(spark, sf_dir, "documents")).select("doc_id", tokens().alias("ts"))
     g = (
         d.filter(F.size("ts") >= _RNG_N)
         .select("doc_id", F.explode(ngram_join(F.col("ts"), _RNG_N)).alias("gram"))
@@ -891,94 +918,34 @@ def ml_bands_maponly(d: DataFrame) -> DataFrame:
     callers get bit-identical bands to the aggregate form: min over
     exploded posting rows == array_min over the same array.
 
-    Cost note: md5 still runs twice per shingle; the explode+agg form
-    partial-aggregates map-side so both shapes move O(docs) rows —
-    this one just never leaves the row, which is what streaming
-    requires."""
-    tk = d.select("doc_id", F.split("text", " ").alias("tk"))
-    arr = tk.select(
-        "doc_id", F.array_distinct(ngram_join(F.col("tk"), 4)).alias("s")
-    ).filter(F.size("s") > 0)  # zip-form shingles (r8) — still map-only
-    dgs = arr.select(
+    Cost note: batch callers keep the aggregate form. Both shapes run
+    md5 twice per shingle, but they are not interchangeable for batch:
+    with these map-only lanes q_minhash_lsh took 10.37 s against 7.27 s
+    for the aggregate form (sf0.1, local[2] on a 4-vCPU shared host,
+    median of 8 interleaved warm rounds, map-only faster in 0 of 8);
+    on perfbench's seed-1 tables, 2.67 s against 2.62 s. This form
+    exists because a stream can only band statelessly."""
+    dgs = _shingle_arrays(d).select(
         "doc_id",
         "s",
-        F.transform("s", lambda x: F.md5(F.concat(x, F.lit("#0")))).alias("g0"),
-        F.transform("s", lambda x: F.md5(F.concat(x, F.lit("#1")))).alias("g1"),
+        F.transform("s", lambda x: _ml_digest(x, 0)).alias("g0"),
+        F.transform("s", lambda x: _ml_digest(x, 1)).alias("g1"),
     )
     lanes = dgs.select(
         "doc_id",
         "s",
         *[
             F.expr(
-                "array_min(transform(g{g}, h ->"
-                " CAST(conv(substr(h, {off}, 4), 16, 10) AS BIGINT)))".format(
-                    g=_ml_lane(i)[0][-1], off=_ml_lane(i)[1]
-                )
+                f"array_min(transform(g{_ml_lane(i)[0][-1]}, h -> {_ml_lane_sql('h', i)}))"
             ).alias(f"m{i}")
             for i in range(_ML_SEEDS)
         ],
     )
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "_", *[F.col(f"m{4 * b + j}").cast("string") for j in range(4)]
-                    )
-                ).alias("bh"),
-            )
-            for b in range(_ML_BANDS)
-        ]
-    )
-    return lanes.select("doc_id", "s", F.explode(band_arr).alias("x")).select(
-        "doc_id", "s", F.col("x.band").alias("band"), F.col("x.bh").alias("bh")
-    )
-
-
-_LSH_CONFIGS = ((2, 8), (4, 4), (8, 2))  # (n_bands, rows_per_band); 16 lanes
+    return _ml_bands(lanes, ("s",), _ML_CONFIG)
 
 
 def _lshc_oracle() -> str:
-    sig_cols = ",\n             ".join(
-        "MIN({w}) AS m{i}".format(w=_hex_window_sql(*_ml_lane(i)), i=i)
-        for i in range(_ML_SEEDS)
-    )
-    config_band_rows = []
-    for nb, rpb in _LSH_CONFIGS:
-        for b in range(nb):
-            concat = " || '_' || ".join(
-                f"CAST(m{rpb * b + j} AS VARCHAR)" for j in range(rpb)
-            )
-            config_band_rows.append(
-                f"SELECT {nb} AS n_bands, doc_id, {b} AS band,"
-                f" md5({concat}) AS bh FROM sig"
-            )
-    bands_union = "\n      UNION ALL\n      ".join(config_band_rows)
-    return f"""
-    WITH ts AS (
-      SELECT doc_id, lang, source, string_split(text, ' ') AS toks
-      FROM documents
-    ), sh AS (
-      SELECT doc_id, lang, source,
-             list_distinct(list_transform(
-               range(0, greatest(len(toks) - 3, 0)),
-               i -> array_to_string(toks[i+1:i+4], ' '))) AS s
-      FROM ts WHERE len(toks) >= 4
-    ), ex AS (
-      SELECT doc_id, unnest(s) AS shingle FROM sh
-    ), dg AS (
-      SELECT doc_id,
-             md5(shingle || '#0') AS d0,
-             md5(shingle || '#1') AS d1
-      FROM ex
-    ), sig AS (
-      SELECT doc_id,
-             {sig_cols}
-      FROM dg GROUP BY doc_id
-    ), bands AS (
-      {bands_union}
-    ), cand AS (
+    return _ml_sig_sql(_LSH_CONFIGS) + """, cand AS (
       SELECT DISTINCT a.n_bands, a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a JOIN bands b
         ON a.n_bands = b.n_bands AND a.band = b.band AND a.bh = b.bh
@@ -1040,57 +1007,9 @@ def q_lsh_parameter_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     no quadratic stage anywhere; measuring the dial costs barely more
     than running the default."""
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    tk = d.select("doc_id", "lang", "source", F.split("text", " ").alias("tk"))
-    arr = tk.select(
-        "doc_id", "lang", "source",
-        F.array_distinct(ngram_join(F.col("tk"), 4)).alias("s"),
-    ).filter(F.size("s") > 0).localCheckpoint(eager=False)
-    ex = arr.select("doc_id", F.explode("s").alias("shingle"))
-    dg = ex.select(
-        "doc_id",
-        F.md5(F.concat(F.col("shingle"), F.lit("#0"))).alias("d0"),
-        F.md5(F.concat(F.col("shingle"), F.lit("#1"))).alias("d1"),
-    )
-    hv = dg.select(
-        "doc_id",
-        *[
-            F.expr(
-                "CAST(conv(substr({d}, {off}, 4), 16, 10) AS BIGINT)".format(
-                    d=_ml_lane(i)[0], off=_ml_lane(i)[1]
-                )
-            ).alias(f"h{i}")
-            for i in range(_ML_SEEDS)
-        ],
-    )
-    sig = hv.groupBy("doc_id").agg(
-        *[F.min(f"h{i}").alias(f"m{i}") for i in range(_ML_SEEDS)]
-    ).localCheckpoint(eager=False)
-    band_structs = []
-    for nb, rpb in _LSH_CONFIGS:
-        for b in range(nb):
-            band_structs.append(
-                F.struct(
-                    F.lit(nb).alias("n_bands"),
-                    F.lit(b).alias("band"),
-                    F.md5(
-                        F.concat_ws(
-                            "_",
-                            *[
-                                F.col(f"m{rpb * b + j}").cast("string")
-                                for j in range(rpb)
-                            ],
-                        )
-                    ).alias("bh"),
-                )
-            )
-    bands = sig.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("x")
-    ).select(
-        "doc_id",
-        F.col("x.n_bands").alias("n_bands"),
-        F.col("x.band").alias("band"),
-        F.col("x.bh").alias("bh"),
-    )
+    arr = _shingle_arrays(d, "lang", "source").localCheckpoint(eager=False)
+    sig = _ml_signatures(arr).localCheckpoint(eager=False)
+    bands = _ml_bands(sig, (), _LSH_CONFIGS)
     a = bands.select(
         F.col("doc_id").alias("doc_a"), "n_bands", "band", "bh"
     )
@@ -1242,10 +1161,8 @@ def q_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # joins), built the parallel, per-row-cheap way — see
     # loader.fan_out / textops.ngram_join.
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    tk = d.select(
-        "doc_id", F.filter(F.split("text", " "), lambda x: x != "").alias("tk")
-    )
-    shingles = F.array_distinct(ngram_join(F.col("tk"), 4))
+    tk = d.select("doc_id", tokens().alias("tk"))
+    shingles = shingle_set(F.col("tk"), 4)
     # Feeds sizes, postings AND verify (three consumers), so the
     # exploded frame is materialized ONCE — pinned, not
     # localCheckpoint'ed: persist keeps lineage, so at 100 TB a lost

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.textops import tokens, words
 from ..registry import query
 from ..sources.loader import load_table
 
@@ -206,9 +207,7 @@ def q_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         F.col("n_chars").cast("long").alias("x"),
-        F.expr(
-            "CAST(size(filter(split(text, ' '), t -> t <> '')) AS BIGINT)"
-        ).alias("y"),
+        F.size(tokens()).cast("bigint").alias("y"),
     )
 
     def rank_map(col: str, out: str) -> DataFrame:
@@ -354,7 +353,7 @@ def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     not corpus-bounded."""
     d = load_table(spark, sf_dir, "documents")
     tf = (
-        d.select(F.explode(F.split("text", " ")).alias("term"))
+        d.select(F.explode(words()).alias("term"))
         .filter(F.col("term") != "")
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -598,7 +597,7 @@ def q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-occurrence aggregate is the only vocabulary-sized shuffle."""
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("term")
+        "doc_id", F.explode(words()).alias("term")
     ).filter(F.col("term") != "")
     mx = tok.agg(F.max("doc_id").cast("long").alias("mx"))
     tok_b = tok.crossJoin(F.broadcast(mx)).select(

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.textops import tokens, words
 from ..registry import query
 from ..sources.loader import load_table
 
@@ -184,7 +185,7 @@ def _bm25_doc_scores(spark: SparkSession, sf_dir: str):
     shuffle-bound, not per-row-compute-bound, so the fan-out helps
     the shingle/HOF pipelines and hurts this one."""
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("term")).filter(
+    tok = d.select("doc_id", F.explode(words()).alias("term")).filter(
         F.col("term") != ""
     )
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
@@ -397,7 +398,7 @@ def q_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
-        F.filter(F.split("text", " "), lambda x: x != "").alias("t"),
+        tokens().alias("t"),
     ).filter(F.size("t") >= 2)
     bg = toks.select(
         "doc_id",
@@ -753,9 +754,7 @@ def q_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents")
         .select(
             "doc_id",
-            F.posexplode(
-                F.filter(F.split("text", " "), lambda x: x != "")
-            ).alias("rn", "w"),
+            F.posexplode(tokens()).alias("rn", "w"),
         )
     )
     a = toks.select("doc_id", F.col("rn").alias("rn"), F.col("w").alias("w1"))
@@ -1010,7 +1009,7 @@ def q_entropy_rate_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials), a w1-keyed join — shuffle proportional to bigram TYPES
     — a context aggregate, a 1-row stitch, and a TakeOrdered top-20."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda x: x != "")
+    toks = tokens()
     idx = F.filter(
         F.sequence(F.lit(1), F.greatest(F.size(toks) - 1, F.lit(1))),
         lambda i: i <= F.size(toks) - 1,
@@ -1376,7 +1375,7 @@ def q_bm25_parameter_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     separating index construction from parameter choice."""
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("term")
+        "doc_id", F.explode(words()).alias("term")
     ).filter(F.col("term") != "")
     tf = (
         tok.groupBy("doc_id", "term")
@@ -1563,9 +1562,7 @@ def q_rouge_reference(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select(
             "doc_id",
             "lang",
-            F.explode(
-                F.filter(F.split("text", " "), lambda x: x != "")
-            ).alias("tok"),
+            F.explode(tokens()).alias("tok"),
         )
         .groupBy("doc_id", "lang", "tok")
         .agg(F.count(F.lit(1)).alias("tf"))

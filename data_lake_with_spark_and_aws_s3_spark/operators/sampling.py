@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.textops import tokens
 from ..registry import query
 from ..sources.loader import load_table
 from .llm_pipeline import _hex_val_sql
@@ -625,9 +626,7 @@ def q_horvitz_thompson(spark: SparkSession, sf_dir: str) -> DataFrame:
     y = d.select(
         "doc_id",
         "lang",
-        F.size(F.filter(F.split("text", " "), lambda x: x != "")).cast(
-            "long"
-        ).alias("y"),
+        F.size(tokens()).cast("long").alias("y"),
     )
     big_w = d.agg(
         F.expr("CAST(SUM(CAST(n_chars AS BIGINT)) AS DECIMAL(38,0))").alias(

@@ -14,6 +14,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.textops import words
 from ..registry import query
 from ..sources.loader import load_table
 
@@ -87,7 +88,7 @@ def q_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array family: size, slice, sort_array, element_at(-1),
     array_contains — all HOF-adjacent builtins over split() arrays."""
     d = load_table(spark, sf_dir, "documents")
-    arr = F.split("text", " ")
+    arr = words()
     return d.select(
         "doc_id",
         F.size(arr).cast("long").alias("n_tokens"),

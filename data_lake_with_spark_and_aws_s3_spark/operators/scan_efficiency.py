@@ -24,9 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.textops import tokens
 from ..registry import query
 from ..sources.loader import load_table
-from .text import tokens
 
 
 @query(

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.textops import tokens, words
 from ..registry import query
 from ..sources.loader import load_table
 from .llm_pipeline import _HEX, _hex_val_sql
@@ -85,7 +86,7 @@ _ORACLE = f"""
 def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     return d.select(
-        F.explode(F.split(F.col("text"), " ")).alias("tok")
+        F.explode(words()).alias("tok")
     ).filter(F.col("tok") != "")
 
 
@@ -171,7 +172,7 @@ def q_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     one hash aggregate; output <= |docs| x dim rows."""
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
+        "doc_id", F.explode(words()).alias("tok")
     ).filter(F.col("tok") != "")
     bucket = f"({_hex_val_sql('md5(tok)')}) % {_FH_DIM}"
     return (
@@ -805,9 +806,7 @@ def q_spacesaving_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     production keeps only the summary side."""
     toks = load_table(spark, sf_dir, "documents").select(
         (F.col("doc_id") % _SS_SHARDS).alias("shard"),
-        F.explode(
-            F.filter(F.split("text", " "), lambda x: x != "")
-        ).alias("tok"),
+        F.explode(tokens()).alias("tok"),
     )
     sc = toks.groupBy("shard", "tok").agg(F.count(F.lit(1)).alias("c"))
     w_sh = Window.partitionBy("shard").orderBy(F.desc("c"), F.asc("tok"))

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.textops import tokens
 from ..registry import query
 from ..sources.loader import load_table
 
@@ -91,7 +92,7 @@ def q_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side projection of the three gate votes, one 1-row
     moment aggregate — six longs per partition cross the wire."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda x: x != "")
+    toks = tokens()
     n_words = F.size(toks)
     v1 = F.when(n_words.between(50, 100000), 1).otherwise(0)
     stop = F.array_distinct(
@@ -557,7 +558,7 @@ def q_mantel_haenszel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side projection of two binary marks, a |langs|-
     group aggregate, a 1-row reduction — constant-size shuffle."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda x: x != "")
+    toks = tokens()
     stop = F.array_distinct(
         F.filter(
             toks,
@@ -669,7 +670,7 @@ def q_partial_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side projection, one 1-row ten-moment aggregate —
     the classic single-pass covariance-matrix collapse."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda x: x != "")
+    toks = tokens()
     f = d.select(
         F.size(toks).cast("decimal(38,0)").alias("x"),
         F.col("n_chars").cast("decimal(38,0)").alias("y"),
@@ -1956,7 +1957,7 @@ def q_cmh_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side two-mark projection, a |langs|-group
     aggregate, a 1-row reduction."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda x: x != "")
+    toks = tokens()
     stop = F.array_distinct(
         F.filter(
             toks,

@@ -19,17 +19,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.textops import ngram_join
+from ..functions.textops import ngram_join, tokens, words
 from ..registry import query
 from ..sources.loader import fan_out, load_table
 
 _STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on")
 _SW_SQL = ", ".join(f"'{w}'" for w in _STOPWORDS)
-
-
-def tokens():
-    """Whitespace tokens of ``text`` with empties removed (multi-space safe)."""
-    return F.filter(F.split(F.col("text"), " "), lambda x: x != "")
 
 
 @query(
@@ -76,7 +71,7 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes this O(vocab) network traffic regardless of corpus size."""
     d = load_table(spark, sf_dir, "documents")
     return (
-        d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
+        d.select("doc_id", F.explode(words()).alias("term"))
         .filter(F.col("term") != "")
         .groupBy("term")
         .agg(
@@ -118,7 +113,7 @@ def q_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     same values. Joins: tf |><| df is a term-keyed shuffle; N is a
     broadcast scalar."""
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("term")).filter(
+    tok = d.select("doc_id", F.explode(words()).alias("term")).filter(
         F.col("term") != ""
     )
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
@@ -316,7 +311,7 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # r8: zip-form shingles (textops.ngram_join — identical values);
     # still per-row, no shuffle
-    tk = d.select("doc_id", F.split("text", " ").alias("tk"))
+    tk = d.select("doc_id", words().alias("tk"))
     return tk.select(
         "doc_id",
         F.array_min(
@@ -367,7 +362,7 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     intersect rarest-first. The top-bigram subquery broadcasts (1
     row)."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda x: x != "")
+    toks = tokens()
     post = d.select("doc_id", F.posexplode(toks).alias("pos", "tok"))
     p1 = post.select("doc_id", F.col("pos").alias("pos1"), F.col("tok").alias("term_1"))
     p2 = post.select("doc_id", F.col("pos").alias("pos2"), F.col("tok").alias("term_2"))
@@ -435,7 +430,7 @@ def q_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials; output is vocabulary-bounded."""
     d = load_table(spark, sf_dir, "documents")
     tf = (
-        d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
+        d.select("doc_id", F.explode(words()).alias("term"))
         .filter(F.col("term") != "")
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -507,7 +502,7 @@ def q_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     a term-keyed bounded self-join, and |sources|^2/2 output rows."""
     d = load_table(spark, sf_dir, "documents")
     vt = (
-        d.select("source", F.explode(F.split("text", " ")).alias("term"))
+        d.select("source", F.explode(words()).alias("term"))
         .filter(F.col("term") != "")
         .distinct()
     )
@@ -618,7 +613,7 @@ def q_source_tv_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source totals, |sources|^2/2 output rows."""
     d = load_table(spark, sf_dir, "documents")
     tf = (
-        d.select("source", F.explode(F.split("text", " ")).alias("term"))
+        d.select("source", F.explode(words()).alias("term"))
         .filter(F.col("term") != "")
         .groupBy("source", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -751,7 +746,7 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     stitch pattern)."""
     d = load_table(spark, sf_dir, "documents")
     tf = (
-        d.select(F.explode(F.split("text", " ")).alias("term"))
+        d.select(F.explode(words()).alias("term"))
         .filter(F.col("term") != "")
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -828,9 +823,7 @@ def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = d.select(
         "doc_id",
         "lang",
-        F.size(
-            F.filter(F.split("text", " "), lambda t: t != F.lit(""))
-        )
+        F.size(tokens())
         .cast("long")
         .alias("words"),
         F.greatest(
@@ -1116,9 +1109,7 @@ def q_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
     |classes| rows."""
     # r8: scan fan-out + zip-form grams (identical values)
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    tk = d.select(
-        F.filter(F.split("text", " "), lambda x: x != "").alias("tk")
-    )
+    tk = d.select(tokens().alias("tk"))
     counts = (
         tk.select(F.explode(ngram_join(F.col("tk"), 3)).alias("term"))
         .groupBy("term")
@@ -1203,15 +1194,15 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     then one (lang) hash aggregate; the oracle's unnest is the SQL
     spelling of the same fold."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda w: w != F.lit(""))
+    toks = tokens()
     per_doc = d.select(
         "lang",
         "n_chars",
         F.size(toks).alias("n_words"),
-        F.expr(
-            "aggregate(filter(split(text, ' '), w -> w != ''),"
-            " CAST(0 AS BIGINT),"
-            " (acc, w) -> acc + (length(w) + 3) div 4)"
+        F.aggregate(
+            toks,
+            F.lit(0).cast("bigint"),
+            lambda acc, w: acc + F.call_function("div", F.length(w) + 3, F.lit(4)),
         ).alias("n_subwords"),
     ).filter(F.col("n_words") > 0)
     # n_words > 0 mirrors the oracle's per_doc (WHERE w <> '' before the
@@ -1309,7 +1300,7 @@ def q_source_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     term-keyed self-join whose shuffle is posting-bounded (never
     |corpus|²), |sources|-row total stitches."""
     tok = load_table(spark, sf_dir, "documents").select(
-        "source", F.explode(F.split("text", " ")).alias("term")
+        "source", F.explode(words()).alias("term")
     ).filter(F.col("term") != "")
     tf = tok.groupBy("source", "term").agg(F.count(F.lit(1)).alias("tf"))
     tot = tf.groupBy("source").agg(F.sum("tf").alias("tf_total"))
@@ -1434,9 +1425,7 @@ def q_chao1_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine as q_good_turing, reduced instead of classed."""
     # r8: scan fan-out + zip-form grams (identical values)
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    tk = d.select(
-        F.filter(F.split("text", " "), lambda x: x != "").alias("tk")
-    )
+    tk = d.select(tokens().alias("tk"))
     counts = (
         tk.select(F.explode(ngram_join(F.col("tk"), 3)).alias("term"))
         .groupBy("term")
@@ -1511,9 +1500,7 @@ def q_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = (
         d.select(
             "source",
-            F.explode(
-                F.filter(F.split("text", " "), lambda x: x != "")
-            ).alias("tok"),
+            F.explode(tokens()).alias("tok"),
         )
         .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).alias("tf"))

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numeric import dec, money_sum
-from ..functions.textops import ngram_join
+from ..functions.textops import ngram_join, words
 from ..registry import query
 from ..sources.loader import fan_out, load_table
 
@@ -218,7 +218,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # textops.ngram_join — identical gram strings, parallel and
     # per-row-cheaper construction; md5 maps over the gram array).
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    tk = d.select("doc_id", "lang", F.split("text", " ").alias("tk"))
+    tk = d.select("doc_id", "lang", words().alias("tk"))
     fingerprint = F.array_min(
         F.transform(ngram_join(F.col("tk"), 4), lambda g: F.md5(g))
     )

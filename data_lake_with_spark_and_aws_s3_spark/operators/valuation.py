@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.textops import token_set
 from ..registry import query
 from ..sources.loader import load_table
 from .similarity import _DOT_SQL, _NORM2_SQL, cosine_expr, dot_int, qint
@@ -369,9 +370,7 @@ def q_confident_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
-        F.explode(
-            F.array_distinct(F.filter(F.split("text", " "), lambda x: x != ""))
-        ).alias("tok"),
+        F.explode(token_set()).alias("tok"),
     )
     w_prof = Window.partitionBy("lang").orderBy(F.desc("c"), F.asc("tok"))
     prof = (

@@ -21,6 +21,10 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F  # noqa: E402
 
 from data_lake_with_spark_and_aws_s3_spark import REGISTRY  # noqa: E402
+from data_lake_with_spark_and_aws_s3_spark.functions.textops import (  # noqa: E402
+    shingles,
+    tokens,
+)
 from data_lake_with_spark_and_aws_s3_spark.operators._edges import (  # noqa: E402
     copurchase_pair_weights,
     trade_edges,
@@ -30,18 +34,9 @@ from data_lake_with_spark_and_aws_s3_spark.sources.loader import load_table  # n
 
 
 def shingle_stats(spark, sf_dir):
-    """Posting-list rows + candidate pairs for the prefix filter."""
+    """Posting-list rows: (doc, distinct 4-gram shingle) pairs."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    starts = F.when(F.size(toks) >= 4, F.sequence(F.lit(0), F.size(toks) - 4)) \
-        .otherwise(F.array().cast("array<int>"))
-    sh = d.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(F.transform(starts, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 4))))
-        ).alias("tok"),
-    )
-    return sh.count()
+    return d.select(F.explode(shingles(4))).count()
 
 
 FAMILIES = {
@@ -246,8 +241,7 @@ def tf_posting_rows(spark, sf_dir):
     """Distinct (source, term) rows = the pair join's posting currency."""
     d = load_table(spark, sf_dir, "documents")
     return (
-        d.select("source", F.explode(F.split("text", " ")).alias("t"))
-        .filter(F.col("t") != "")
+        d.select("source", F.explode(tokens()).alias("t"))
         .groupBy("source", "t")
         .count()
         .count()
@@ -265,9 +259,8 @@ def support_grid_rows(spark, sf_dir):
 def gram_positions(spark, sf_dir):
     """Total 8-gram positions = the shuffle currency of the df join."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda x: x != F.lit(""))
     return (
-        d.select(F.greatest(F.size(toks) - 7, F.lit(0)).alias("n"))
+        d.select(F.greatest(F.size(tokens()) - 7, F.lit(0)).alias("n"))
         .agg(F.sum("n"))
         .collect()[0][0]
     )
@@ -279,8 +272,7 @@ def corpus_tokens(spark, sf_dir):
     """Token count = the shuffle currency of the tf/df and bigram
     model builds."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda x: x != F.lit(""))
-    return d.select(F.size(toks).alias("n")).agg(F.sum("n")).collect()[0][0]
+    return d.select(F.size(tokens()).alias("n")).agg(F.sum("n")).collect()[0][0]
 
 
 # Iterative graph family (VERDICT r3 #5): the document-corpus scale

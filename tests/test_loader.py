@@ -1,7 +1,8 @@
 """The read-schema memo of ``sources.loader``: a memo hit must read with
 the schema the same read would infer (TIMESTAMP_NTZ read as TIMESTAMP),
 launch no job, and miss whenever the files or the inference confs change;
-no other module infers a parquet schema."""
+no other module infers a parquet schema, and no module but
+``functions/textops.py`` splits the documents' text."""
 
 from __future__ import annotations
 
@@ -186,5 +187,27 @@ def test_only_the_loader_infers_parquet_schemas():
             offenders += [
                 f"{path.relative_to(pkg)}:{text.count(chr(10), 0, m.start()) + 1}"
                 for m in _INFERS_SCHEMA.finditer(text)
+            ]
+    assert not offenders, offenders
+
+
+# a split of the documents' `text` column: F.split("text" / F.col("text"),
+# or Spark SQL's split(text, ...) (DuckDB's string_split is not matched)
+_SPLITS_TEXT = re.compile(r"(?<!\w)split\(\s*(?:F\.col\(\s*)?[\"']?text\b")
+
+
+def test_only_textops_splits_document_text():
+    """Words, tokens, token sets and shingles of ``documents.text`` come
+    from ``functions/textops.py``; a split anywhere else is a second
+    definition of those units."""
+    pkg = pathlib.Path(loader.__file__).resolve().parents[1]
+    textops_py = pkg / "functions" / "textops.py"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        text = path.read_text()
+        if path != textops_py:
+            offenders += [
+                f"{path.relative_to(pkg)}:{text.count(chr(10), 0, m.start()) + 1}"
+                for m in _SPLITS_TEXT.finditer(text)
             ]
     assert not offenders, offenders
