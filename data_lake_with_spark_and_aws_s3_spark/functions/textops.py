@@ -6,12 +6,13 @@
 - tokens(): words() with the empty tokens removed (multi-space safe) —
   `list_filter(string_split(text, ' '), x -> x <> '')`.
 - token_set(): the distinct tokens (token-set Jaccard, vocabularies).
-- shingles(n): the distinct word n-grams, joined by ' ', over words()
-  — the near-duplicate family's 4-gram grain.
+- shingles(d, n): (doc_id, s) rows, each document's distinct word
+  n-grams joined by ' ' over words(), documents with none dropped —
+  the near-duplicate family's shingle sets (n = 4).
 
-A caller that reuses one split several times selects `words()` (or
-`tokens()`) into its own column first and hands that column to
-shingle_set / ngram_join: Catalyst then keeps the split in its own
+shingles() and every caller that reuses one split several times select
+`words()` (or `tokens()`) into its own column first and hand that
+column to shingle_set / ngram_join: Catalyst then keeps the split in its own
 (codegen'd) Project; a split written inside the n-gram expression is
 inlined at every slice that reads it, with one Project fewer.
 
@@ -30,7 +31,7 @@ winnowing, span scrub, decontamination).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -49,9 +50,13 @@ def token_set() -> Column:
     return F.array_distinct(tokens())
 
 
-def shingles(n: int) -> Column:
-    """The distinct word n-grams of `text` (over words())."""
-    return shingle_set(words(), n)
+def shingles(d: DataFrame, n: int) -> DataFrame:
+    """(doc_id, s): each document's distinct word n-grams of `text`
+    (over words()), documents with none dropped."""
+    tk = d.select("doc_id", words().alias("tk"))
+    return tk.select("doc_id", shingle_set(F.col("tk"), n).alias("s")).filter(
+        F.size("s") > 0
+    )
 
 
 def shingle_set(toks: Column, n: int) -> Column:

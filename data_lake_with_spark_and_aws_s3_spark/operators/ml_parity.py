@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.textops import shingle_set, tokens, words
+from ..functions.textops import shingles, tokens
 from ..registry import query
 from ..sources.loader import fan_out, load_table
 from .neardup import _ml_exact_pairs, _ml_oracle
@@ -145,14 +145,8 @@ def ml_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
     # r8: scan fan-out + zip-form shingles (identical values)
-    d = fan_out(load_table(spark, sf_dir, "documents"))
-    tk = d.select("doc_id", words().alias("tk"))
-    sets = tk.select(
-        "doc_id", shingle_set(F.col("tk"), 4).alias("toks")
-    ).filter(F.size("toks") > 0)
-    tf = HashingTF(
-        inputCol="toks", outputCol="vec", numFeatures=_MH_DIM, binary=True
-    )
+    sets = shingles(fan_out(load_table(spark, sf_dir, "documents")), 4)
+    tf = HashingTF(inputCol="s", outputCol="vec", numFeatures=_MH_DIM, binary=True)
     feats = tf.transform(sets).select("doc_id", "vec")
     model = MinHashLSH(
         inputCol="vec", outputCol="sig", numHashTables=_MH_TABLES, seed=42

@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..functions.textops import ngram_join, shingle_set, token_set, tokens, words
+from ..functions.textops import ngram_join, shingle_set, shingles, token_set, tokens
 from ..registry import query
 from ..sources.loader import fan_out, load_table
 from ._pin import pin
@@ -383,16 +383,6 @@ def q_substring_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _shingle_arrays(d: DataFrame, *keep: str) -> DataFrame:
-    """(doc_id, *keep, s): each document's 4-gram shingle set, docs
-    with none dropped. The split is its own column, so Catalyst keeps
-    it in one Project instead of inlining it into every slice."""
-    tk = d.select("doc_id", *keep, words().alias("tk"))
-    return tk.select("doc_id", *keep, shingle_set(F.col("tk"), 4).alias("s")).filter(
-        F.size("s") > 0
-    )
-
-
 # --- Prefix-filtering set-similarity join (AllPairs/PPJoin family) ---
 
 _PF_T_NUM, _PF_T_DEN = 1, 2  # Jaccard threshold t = 1/2
@@ -460,7 +450,7 @@ def prefix_filter_pairs(d: DataFrame) -> DataFrame:
     Round 8: scan fan-out + zip-form shingles (loader.fan_out /
     textops.ngram_join docstrings — identical values, parallel and
     per-row-cheaper construction)."""
-    arr = _shingle_arrays(fan_out(d))
+    arr = shingles(fan_out(d), 4)
     sh = arr.select("doc_id", F.size("s").alias("len"), F.explode("s").alias("tok"))
     dfreq = sh.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
 
@@ -581,15 +571,12 @@ def _ml_signatures(arr: DataFrame) -> DataFrame:
 
 
 def _ml_bands(sig: DataFrame, keep: tuple, configs: tuple) -> DataFrame:
-    """Band rows (doc_id, *keep, [n_bands,] band, bh) of signatures
+    """Band rows (doc_id, *keep, n_bands, band, bh) of signatures
     m0..m15: band b of an (n_bands, rows_per_band) config keys on
-    md5(concat_ws('_', m[rpb*b] .. m[rpb*b + rpb - 1])). Only a grid
-    of several configs tags its rows with n_bands; a single config's
-    band struct stays (band, bh), so those plans do not carry it."""
-    tag = len(configs) > 1
+    md5(concat_ws('_', m[rpb*b] .. m[rpb*b + rpb - 1]))."""
     structs = [
         F.struct(
-            *([F.lit(nb).alias("n_bands")] if tag else []),
+            F.lit(nb).alias("n_bands"),
             F.lit(b).alias("band"),
             F.md5(
                 F.concat_ws(
@@ -600,9 +587,8 @@ def _ml_bands(sig: DataFrame, keep: tuple, configs: tuple) -> DataFrame:
         for nb, rpb in configs
         for b in range(nb)
     ]
-    fields = (["n_bands"] if tag else []) + ["band", "bh"]
     return sig.select("doc_id", *keep, F.explode(F.array(*structs)).alias("x")).select(
-        "doc_id", *keep, *[F.col(f"x.{f}").alias(f) for f in fields]
+        "doc_id", *keep, "x.n_bands", "x.band", "x.bh"
     )
 
 
@@ -702,7 +688,7 @@ def _ml_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Round 8: scan fan-out + zip-form shingles (loader.fan_out /
     textops.ngram_join — identical values, parallel construction)."""
-    arr = _shingle_arrays(fan_out(load_table(spark, sf_dir, "documents")))
+    arr = shingles(fan_out(load_table(spark, sf_dir, "documents")), 4)
     bands = _ml_bands(_ml_signatures(arr), (), _ML_CONFIG)
     a = bands.select(F.col("doc_id").alias("doc_a"), "band", "bh")
     b = bands.select(F.col("doc_id").alias("doc_b"), "band", "bh")
@@ -909,7 +895,7 @@ def q_repeated_ngram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ml_bands_maponly(d: DataFrame) -> DataFrame:
-    """(doc_id, s, band, bh) band rows for the md5-portable MinHash
+    """(doc_id, s, n_bands, band, bh) band rows for the md5-portable MinHash
     scheme (_ml_exact_pairs' 16 lanes / 4 bands), computed WITHOUT the
     per-doc aggregation: each lane's minhash is an array_min over the
     shingle array (HOF fold inside the row), so the derivation is
@@ -925,7 +911,7 @@ def ml_bands_maponly(d: DataFrame) -> DataFrame:
     median of 8 interleaved warm rounds, map-only faster in 0 of 8);
     on perfbench's seed-1 tables, 2.67 s against 2.62 s. This form
     exists because a stream can only band statelessly."""
-    dgs = _shingle_arrays(d).select(
+    dgs = shingles(d, 4).select(
         "doc_id",
         "s",
         F.transform("s", lambda x: _ml_digest(x, 0)).alias("g0"),
@@ -1007,7 +993,7 @@ def q_lsh_parameter_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     no quadratic stage anywhere; measuring the dial costs barely more
     than running the default."""
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    arr = _shingle_arrays(d, "lang", "source").localCheckpoint(eager=False)
+    arr = shingles(d, 4).localCheckpoint(eager=False)
     sig = _ml_signatures(arr).localCheckpoint(eager=False)
     bands = _ml_bands(sig, (), _LSH_CONFIGS)
     a = bands.select(
@@ -1162,7 +1148,7 @@ def q_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # loader.fan_out / textops.ngram_join.
     d = fan_out(load_table(spark, sf_dir, "documents"))
     tk = d.select("doc_id", tokens().alias("tk"))
-    shingles = shingle_set(F.col("tk"), 4)
+    grams = shingle_set(F.col("tk"), 4)
     # Feeds sizes, postings AND verify (three consumers), so the
     # exploded frame is materialized ONCE — pinned, not
     # localCheckpoint'ed: persist keeps lineage, so at 100 TB a lost
@@ -1175,7 +1161,7 @@ def q_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist) so each invocation recomputes from parquet instead of
     # silently reading an earlier run's cache.
     sh = pin(
-        tk.select("doc_id", F.explode(shingles).alias("shingle")),
+        tk.select("doc_id", F.explode(grams).alias("shingle")),
         StorageLevel.DISK_ONLY,
     )
     size_a = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))

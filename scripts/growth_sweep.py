@@ -35,8 +35,7 @@ from data_lake_with_spark_and_aws_s3_spark.sources.loader import load_table  # n
 
 def shingle_stats(spark, sf_dir):
     """Posting-list rows: (doc, distinct 4-gram shingle) pairs."""
-    d = load_table(spark, sf_dir, "documents")
-    return d.select(F.explode(shingles(4))).count()
+    return shingles(load_table(spark, sf_dir, "documents"), 4).select(F.explode("s")).count()
 
 
 FAMILIES = {

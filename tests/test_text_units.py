@@ -20,7 +20,6 @@ from data_lake_with_spark_and_aws_s3_spark.operators.neardup import (
     _ml_bands,
     _ml_sig_sql,
     _ml_signatures,
-    _shingle_arrays,
     ml_bands_maponly,
 )
 from data_lake_with_spark_and_aws_s3_spark.sources.loader import load_table
@@ -45,34 +44,36 @@ def docs(spark):
 
 def test_text_units_match_duckdb(docs, smoke_duck):
     got = {
-        r["doc_id"]: (r["w"], r["t"], set(r["ts"]), set(r["sh"]))
+        r["doc_id"]: (r["w"], r["t"], set(r["ts"]))
         for r in docs.select(
             "doc_id",
             words().alias("w"),
             tokens().alias("t"),
             token_set().alias("ts"),
-            shingles(4).alias("sh"),
         ).collect()
     }
-    want = {
-        doc_id: (w, t, set(ts), set(sh))
-        for doc_id, w, t, ts, sh in smoke_duck.execute("""
-            SELECT doc_id, toks,
-                   list_filter(toks, x -> x <> ''),
-                   list_distinct(list_filter(toks, x -> x <> '')),
-                   list_transform(range(0, greatest(len(toks) - 3, 0)),
-                                  i -> array_to_string(toks[i+1:i+4], ' '))
-            FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-        """).fetchall()
-    }
-    assert any(sh for *_, sh in want.values())
+    got_sh = {r["doc_id"]: set(r["s"]) for r in shingles(docs, 4).collect()}
+    want, want_sh = {}, {}
+    for doc_id, w, t, ts, sh in smoke_duck.execute("""
+        SELECT doc_id, toks,
+               list_filter(toks, x -> x <> ''),
+               list_distinct(list_filter(toks, x -> x <> '')),
+               list_transform(range(0, greatest(len(toks) - 3, 0)),
+                              i -> array_to_string(toks[i+1:i+4], ' '))
+        FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
+    """).fetchall():
+        want[doc_id] = (w, t, set(ts))
+        if sh:
+            want_sh[doc_id] = set(sh)
+    assert want_sh
     assert got == want
+    assert got_sh == want_sh
 
 
 def test_spark_signatures_equal_the_oracle_sig_cte(docs, smoke_duck):
     got = {
         tuple(r)
-        for r in _ml_signatures(_shingle_arrays(docs))
+        for r in _ml_signatures(shingles(docs, 4))
         .select("doc_id", *_LANES)
         .collect()
     }
@@ -92,15 +93,16 @@ def _oracle_rows(duck, configs, cols: str) -> set:
 
 
 def test_both_lane_forms_band_like_the_oracle(docs, smoke_duck):
-    want = _oracle_rows(smoke_duck, _ML_CONFIG, "doc_id, band, bh")
-    aggregate = _ml_bands(_ml_signatures(_shingle_arrays(docs)), (), _ML_CONFIG)
-    maponly = ml_bands_maponly(docs).select("doc_id", "band", "bh")
-    assert {tuple(r) for r in aggregate.collect()} == want
-    assert {tuple(r) for r in maponly.collect()} == want
+    cols = ("doc_id", "n_bands", "band", "bh")
+    want = _oracle_rows(smoke_duck, _ML_CONFIG, ", ".join(cols))
+    aggregate = _ml_bands(_ml_signatures(shingles(docs, 4)), (), _ML_CONFIG)
+    maponly = ml_bands_maponly(docs)
+    assert {tuple(r) for r in aggregate.select(*cols).collect()} == want
+    assert {tuple(r) for r in maponly.select(*cols).collect()} == want
 
 
 def test_grid_band_keys_equal_the_oracle_bands(docs, smoke_duck):
     want = _oracle_rows(smoke_duck, _LSH_CONFIGS, "n_bands, doc_id, band, bh")
-    bands = _ml_bands(_ml_signatures(_shingle_arrays(docs)), (), _LSH_CONFIGS)
+    bands = _ml_bands(_ml_signatures(shingles(docs, 4)), (), _LSH_CONFIGS)
     got = bands.select("n_bands", "doc_id", "band", "bh").collect()
     assert {tuple(r) for r in got} == want
